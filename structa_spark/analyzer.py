@@ -21,24 +21,28 @@ instead:
    ``null_threshold`` for nulls, the numeric tower Bool < Int < Float,
    the numeric-timestamp heuristic over min/max, and the
    record-vs-table ``field_threshold`` duality.
-4. Optionally runs one extra *small* job per context for top-k
-   frequency samples (unpivot -> groupBy -> windowed top-k: ONE
-   shuffle for all leaves together) and one for per-position character
-   classes of fixed-width strings (unpivot -> posexplode -> ONE
-   shuffle), feeding the CharClass induction in
-   :mod:`structa_spark.chars`.
+4. Runs one extra *small* job per context for top-k frequency
+   samples (unpivot -> groupBy -> windowed top-k: ONE shuffle for all
+   leaves together) and one for per-position character classes of
+   fixed-width strings (unpivot -> posexplode -> ONE shuffle),
+   feeding the CharClass induction in :mod:`structa_spark.chars`.
+   Fixed-width short arrays get one more stats pass each and become
+   positional tuples.
+
+Every job goes through one concurrent pool (:func:`_analyze`): each
+finished job submits the jobs that consume its result.
 
 At 100 TB none of this materializes data on the driver: every job
-reduces to per-leaf scalars, quartiles use mergeable GK sketches
-(``percentile_approx``), distincts use HLL++
-(``approx_count_distinct``), and pattern induction can be run on a
-``df.sample`` (``pattern_sample``) without changing semantics.
+reduces to per-leaf scalars, quartiles use mergeable KLL sketches
+(``kll_sketch_agg_double``) and distincts use HLL sketches
+(``hll_sketch_agg``).
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 from dataclasses import dataclass, field as dc_field, fields as dc_fields, replace
+from functools import partial
 from typing import Dict, List, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame
@@ -70,51 +74,38 @@ class AnalyzerConfig:
     merge_threshold: float = 0.5    # record-collapse similarity gate
     max_numeric_len: int = 30       # only try conversions on short strings
     strip_whitespace: bool = False  # trim strings before analysis
-    max_pattern_len: int = 64       # induce patterns up to this width
     exact: bool = False             # exact quartiles/distincts (oracle mode)
-    # percentile_approx accuracy (~1/err). PRECEDENCE: used only when
-    # kll_k == 0 (and exact is False) — with a KLL sketch enabled the
-    # displayed quartiles read from that sketch (fixed ~1.65% rank
-    # error at k=200) so merge_profiles folds the very numbers shown,
-    # and this knob is ignored. Set kll_k=0 to get the
-    # accuracy-tunable percentile_approx path (profiles then carry no
-    # mergeable quantile state).
-    quantile_accuracy: int = 1000
-    # KLL-doubles sketch parameter for the mergeable quantile summary
-    # carried in Stats.qsketches (k=200 -> ~1.65% worst-case rank
-    # error, ~3 KB serialized). 0 disables carrying sketches (and
-    # hands quartiles to percentile_approx/quantile_accuracy above).
-    kll_k: int = 200
-    # HLL++ relative standard deviation for approx_count_distinct in
-    # sketch mode. Tight (0.5%) because the uniqueness flag is derived
-    # from it: a loose default-rsd (5%) sketch can't distinguish
-    # "unique" from "2% duplicated" at all. ~32 KB of registers per
-    # column sketch — still negligible against executor memory.
-    distinct_rsd: float = 0.005
-    top_k: int = 3                  # frequency sample size
-    collect_samples: bool = True    # run the top-k frequency job
-    induce_patterns: bool = True    # run the char-pattern job
-    pattern_sample: Optional[float] = None  # sample fraction at scale
-    # numeric-timestamp heuristic window (reference analyzer.py:742-770)
     # plan wide homogeneous structs (> field_threshold fields, one
     # common type) as ONE unpivoted (key, value) context instead of
     # per-field contexts; False forces the per-field plan (the
     # record-vs-table decision then happens at assembly time via
     # _maybe_table — same result, unboundedly many jobs on wide docs)
     unpivot_tables: bool = True
-    # the analyzer makes several passes over the input; when the
-    # input is a SMALL local file set (single-row-group parquet
-    # caps scan parallelism at one task per file), repartition to the
-    # cluster's parallelism and cache before analyzing. The byte gate
-    # makes this self-disabling at scale: a 100 TB table streams,
-    # a 10 MB file decodes once instead of once per job.
-    cache_small_input: bool = True
-    cache_input_max_bytes: int = 1 << 30
+    # numeric-timestamp heuristic window (reference analyzer.py:742-770)
     epoch: str = "unix"             # unix | excel | custom
     epoch_base: Optional[_dt.datetime] = None   # base for epoch='custom'
     scale: float = 1.0              # units -> seconds multiplier
     min_timestamp: Optional[_dt.datetime] = None   # default: now - 20y
     max_timestamp: Optional[_dt.datetime] = None   # default: now + 10y
+
+
+#: induce character patterns for fixed-width strings up to this width
+_MAX_PATTERN_LEN = 64
+#: KLL-doubles sketch parameter of the mergeable quantile summary
+#: carried in Stats.qsketches (k=200 -> ~1.65% worst-case rank error,
+#: ~3 KB serialized)
+_KLL_K = 200
+#: HLL relative standard deviation of the sketch-mode distinct count.
+#: Tight (0.5%) because the uniqueness flag is derived from it: a
+#: loose 5% sketch can't tell "unique" from "2% duplicated" at all.
+_DISTINCT_RSD = 0.005
+#: most and least frequent values kept as the sample of a leaf
+_TOP_K = 3
+#: the analyzer makes several passes over its input, so a local file
+#: set up to this size is repartitioned to the session's parallelism
+#: and cached first (a 10 MB file decodes once instead of once per
+#: job); anything larger, remote or non-file streams unchanged
+_CACHE_INPUT_MAX_BYTES = 1 << 30
 
 
 # ---------------------------------------------------------------------------
@@ -367,7 +358,7 @@ def _sketch_agg_exprs(leaf: _Leaf, cfg: AnalyzerConfig) -> List[Column]:
             # NULL, and distinct counts must ignore nulls.
             hc = F.when(c.isNotNull(), F.xxhash64(c))
         exprs = [F.hll_sketch_estimate(
-            F.hll_sketch_agg(hc, F.lit(_hll_lg_k(cfg.distinct_rsd))))
+            F.hll_sketch_agg(hc, F.lit(_hll_lg_k(_DISTINCT_RSD))))
             .alias(f"{k}__distinct")]
 
     dt = leaf.dtype
@@ -380,7 +371,7 @@ def _sketch_agg_exprs(leaf: _Leaf, cfg: AnalyzerConfig) -> List[Column]:
         if cfg.exact:
             exprs.append(F.percentile(qc, F.lit([0.25, 0.5, 0.75]))
                          .alias(f"{k}__q"))
-        elif cfg.kll_k:
+        else:
             # ONE quantile aggregate per leaf: the displayed quartiles
             # read from the same mergeable KLL sketch that
             # merge_profiles folds (Spark collapses the semantically
@@ -390,7 +381,7 @@ def _sketch_agg_exprs(leaf: _Leaf, cfg: AnalyzerConfig) -> List[Column]:
             # rank error, the sketch's documented accuracy for both
             # the single-shard and the shard-fold path.
             sk = F.kll_sketch_agg_double(qc.cast("double"),
-                                         F.lit(cfg.kll_k))
+                                         F.lit(_KLL_K))
             # the count() gate keeps an all-null column from calling
             # get_quantile on an empty sketch (which raises); the
             # CaseWhen branch is lazy, so the result stays NULL like
@@ -400,10 +391,6 @@ def _sketch_agg_exprs(leaf: _Leaf, cfg: AnalyzerConfig) -> List[Column]:
                 F.kll_sketch_get_quantile_double(
                     sk, F.lit([0.25, 0.5, 0.75]))).alias(f"{k}__q"))
             exprs.append(sk.alias(f"{k}__qsk"))
-        else:
-            exprs.append(F.percentile_approx(
-                qc, F.lit([0.25, 0.5, 0.75]),
-                F.lit(cfg.quantile_accuracy)).alias(f"{k}__q"))
     return exprs
 
 
@@ -474,7 +461,7 @@ def _classify_leaf(leaf: _Leaf, row: Dict, cfg: AnalyzerConfig,
         min=row.get(f"{k}__min"), max=row.get(f"{k}__max"),
         unique=bool(distinct == card) if cfg.exact else
         bool(distinct
-             and distinct >= (1.0 - 3 * cfg.distinct_rsd) * card),
+             and distinct >= (1.0 - 3 * _DISTINCT_RSD) * card),
     )
     q = row.get(f"{k}__q")
     if q is not None:
@@ -641,7 +628,6 @@ def _counted_values(ctx: _Context, keys: Dict[str, _Leaf]) -> DataFrame:
 
 
 def _collect_topk(ctx: _Context, string_keys: Dict[str, _Leaf],
-                  cfg: AnalyzerConfig,
                   counted: Optional[DataFrame] = None
                   ) -> Tuple[Dict[str, List[Tuple[str, int]]],
                              Dict[str, List[Tuple[str, int]]]]:
@@ -652,7 +638,7 @@ def _collect_topk(ctx: _Context, string_keys: Dict[str, _Leaf],
     Scale note: the shuffle key is (leaf, value) — the same
     cardinality structa's per-column Counter would see, but
     distributed and combiner-compressed map-side."""
-    if not string_keys or not cfg.collect_samples:
+    if not string_keys:
         return {}, {}
     from pyspark.sql.window import Window
 
@@ -666,14 +652,14 @@ def _collect_topk(ctx: _Context, string_keys: Dict[str, _Leaf],
     ranked = (counted
               .withColumn("rt", F.row_number().over(w_top))
               .withColumn("rb", F.row_number().over(w_bot))
-              .where((F.col("rt") <= cfg.top_k)
-                     | (F.col("rb") <= cfg.top_k)))
+              .where((F.col("rt") <= _TOP_K)
+                     | (F.col("rb") <= _TOP_K)))
     out: Dict[str, List[Tuple[str, int]]] = {}
     bot: Dict[str, List[Tuple[str, int]]] = {}
     for r in ranked.collect():
-        if r["rt"] <= cfg.top_k:
+        if r["rt"] <= _TOP_K:
             out.setdefault(r["k"], []).append((r["v"], r["n"]))
-        if r["rb"] <= cfg.top_k:
+        if r["rb"] <= _TOP_K:
             bot.setdefault(r["k"], []).append((r["v"], r["n"]))
     for v in out.values():
         v.sort(key=lambda t: (-t[1], t[0]))
@@ -703,7 +689,7 @@ def _collect_string_quartiles(
     cumulative window partitions by leaf, so one extremely-high-
     cardinality column serializes into one task; exact mode is the
     oracle path — sketch mode skips string quartiles (numeric ones
-    use the mergeable GK sketch instead)."""
+    use the mergeable KLL sketch instead)."""
     if not string_keys or not cfg.exact:
         return {}
     from pyspark.sql.window import Window
@@ -732,21 +718,16 @@ def _collect_string_quartiles(
     return {r["k"]: (r["q1"], r["q2"], r["q3"]) for r in agg.collect()}
 
 
-def _collect_patterns(ctx: _Context, fixed_leaves: Dict[str, _Leaf],
-                      cfg: AnalyzerConfig) -> Dict[str, list]:
+def _collect_patterns(ctx: _Context,
+                      fixed_leaves: Dict[str, _Leaf]) -> Dict[str, list]:
     """ONE job: per-position char sets of fixed-width string leaves
     (posexplode + collect_set; reference analyzer.py:685-719)."""
-    if not fixed_leaves or not cfg.induce_patterns:
-        return {}
-    df = ctx.df
-    if cfg.pattern_sample:
-        df = df.sample(cfg.pattern_sample, seed=42)
     pairs = [
         F.struct(F.lit(key).alias("k"),
                  F.expr(leaf.expr).cast("string").alias("v"))
         for key, leaf in fixed_leaves.items()
     ]
-    unp = (df.select(F.explode(F.array(*pairs)).alias("p"))
+    unp = (ctx.df.select(F.explode(F.array(*pairs)).alias("p"))
            .select("p.k", "p.v").where(F.col("v").isNotNull()))
     chars = (unp
              .select("k", F.posexplode(F.split(F.col("v"), "")).alias(
@@ -775,7 +756,7 @@ class Profile:
     def render(self, opts=None) -> str:
         out = self.root.render(opts)
         if not self.config.exact and self._has_quartile_less_string():
-            # sketch mode computes numeric quartiles with mergeable GK
+            # sketch mode computes numeric quartiles with mergeable KLL
             # sketches, but lexicographic string quartiles have no
             # mergeable sketch — they are exact-mode only, so say so
             # instead of leaving the range silently bare
@@ -913,25 +894,6 @@ def _phase_a_job_builders(leaves: List[_Leaf],
     return [_make(items, i == 0) for i, items in enumerate(specs)]
 
 
-def _phase_a_jobs(leaves: List[_Leaf], length_leaves: List[_Leaf],
-                  cfg: AnalyzerConfig) -> List[List[Column]]:
-    """Eager form of :func:`_phase_a_job_builders` for the
-    sequential single-context paths."""
-    return [build() for build in
-            _phase_a_job_builders(leaves, length_leaves, cfg)]
-
-
-def _phase_a_row(df: DataFrame, leaves: List[_Leaf],
-                 length_leaves: List[_Leaf],
-                 cfg: AnalyzerConfig) -> Dict:
-    """Phase A over one DataFrame, run sequentially (used by the
-    auxiliary single-context paths, e.g. tuple induction)."""
-    row: Dict = {"__rows__": None}
-    for exprs in _phase_a_jobs(leaves, length_leaves, cfg):
-        row.update(df.agg(*exprs).collect()[0].asDict())
-    return row
-
-
 def _phase_b_row(df: DataFrame, leaves: List[_Leaf], row: Dict,
                  cfg: AnalyzerConfig) -> Dict:
     """Phase B: length-gated conversion-candidate scoring; returns the
@@ -958,53 +920,34 @@ def _phase_b_row(df: DataFrame, leaves: List[_Leaf], row: Dict,
     return out
 
 
-def _run_leaf_stats(df: DataFrame, leaves: List[_Leaf],
-                    length_leaves: List[_Leaf],
-                    cfg: AnalyzerConfig) -> Dict:
-    """Phase A + phase B over one DataFrame (merged scalar row)."""
-    row = _phase_a_row(df, leaves, length_leaves, cfg)
-    row.update(_phase_b_row(df, leaves, row, cfg))
-    return row
-
-
 _ATOMIC = (T.BooleanType, T.StringType, T.TimestampType,
            T.TimestampNTZType, T.DateType, T.BinaryType) + _NUMERIC
 
 
-def _induce_tuples(contexts, array_srcs, length_stats, cfg):
+def _tuple_leaves(path: Tuple[str, ...], expr: str, elem_dt: T.DataType,
+                  ls: Optional[LengthStats],
+                  cfg: AnalyzerConfig) -> List[_Leaf]:
     """Fixed-width short arrays become positional tuples (reference
     analyzer.py:576-588: all sub-lists the same length, shorter than
     field_threshold, fewer than the outer count — 'table-like input
-    from a language without tuples'). One extra job per qualifying
-    array column, per-index stats via ``element_at``."""
-    tuple_nodes: Dict[Tuple[str, ...], Node] = {}
-    for path, (ctx_id, expr, elem_dt) in array_srcs.items():
-        ls = length_stats.get(path)
-        if ls is None or not ls.card or ls.min is None:
-            continue
-        width = ls.min
-        if not (ls.fixed and 0 < width < cfg.field_threshold
-                and ls.card > width):
-            continue
-        if not isinstance(elem_dt, _ATOMIC):
-            continue
-        elem = "element_at({}, {})"
-        if cfg.strip_whitespace and isinstance(elem_dt, T.StringType):
-            elem = "trim(element_at({}, {}))"
-        leaves = [
-            _Leaf(path + (str(i),), f"e{i}", elem.format(expr, i + 1),
-                  elem_dt)
-            for i in range(width)
-        ]
-        row = _run_leaf_stats(contexts[ctx_id].df, leaves, [], cfg)
-        fields = []
-        for i, leaf in enumerate(leaves):
-            node = _classify_leaf(leaf, row, cfg, row["__rows__"])
-            card = row.get(f"{leaf.key}__card") or 0
-            fields.append(FieldT(key=i, value=node, count=card,
-                                 optional=bool(card < ls.card)))
-        tuple_nodes[path] = TupleT(fields=tuple(fields), lengths=ls)
-    return tuple_nodes
+    from a language without tuples'). Returns one ``element_at`` leaf
+    per position of a qualifying array, profiled by its own phase-A
+    and phase-B jobs over the array's context; [] otherwise."""
+    if ls is None or not ls.card or ls.min is None:
+        return []
+    width = ls.min
+    if not (ls.fixed and 0 < width < cfg.field_threshold
+            and ls.card > width):
+        return []
+    if not isinstance(elem_dt, _ATOMIC):
+        return []
+    elem = "element_at({}, {})"
+    if cfg.strip_whitespace and isinstance(elem_dt, T.StringType):
+        elem = "trim(element_at({}, {}))"
+    return [
+        _Leaf(path + (str(i),), f"e{i}", elem.format(expr, i + 1), elem_dt)
+        for i in range(width)
+    ]
 
 
 def _input_bytes(df: DataFrame) -> Optional[int]:
@@ -1036,10 +979,8 @@ def _prepare_input(df: DataFrame, cfg: AnalyzerConfig):
     session's parallelism (single-row-group parquet otherwise pins
     every pass to one scan task) and persisted; anything big, remote
     or non-file streams unchanged. Returns (df, cached?)."""
-    if not cfg.cache_small_input:
-        return df, False
     nbytes = _input_bytes(df)
-    if nbytes is None or nbytes > cfg.cache_input_max_bytes:
+    if nbytes is None or nbytes > _CACHE_INPUT_MAX_BYTES:
         return df, False
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
@@ -1104,19 +1045,22 @@ def _analyze(df: DataFrame, cfg: AnalyzerConfig,
     topk: Dict[str, List[Tuple[str, int]]] = {}
     botk: Dict[str, List[Tuple[str, int]]] = {}
     str_q: Dict[str, Tuple[str, str, str]] = {}
+    leaf_nodes: Dict[Tuple[str, ...], Node] = {}
+    length_stats: Dict[Tuple[str, ...], LengthStats] = {}
+    tuple_nodes: Dict[Tuple[str, ...], Node] = {}
     from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor
     from concurrent.futures import wait as _fwait
 
-    # two-wave concurrent job submission ACROSS contexts: every
-    # context's phase-A jobs launch immediately (each splits into a
-    # codegen and a sketch job internally); as each phase A lands, its
-    # dependent jobs (top-k, phase-B candidates, string quartiles) are
-    # fanned out without waiting for the other contexts. Total
-    # wall-clock is the critical path of the slowest context, not the
-    # sum over contexts — at toy scale this hides per-job scheduling
-    # latency, at scale it keeps the cluster busy across the small
-    # tail stages.
-    ctx_by_id = {ctx.id: ctx for ctx in contexts}
+    # ONE concurrent pool runs every job, ACROSS contexts: each future
+    # carries the step that consumes its result, and a step submits the
+    # jobs that depend on it without waiting for other contexts —
+    # phase A (a codegen and a sketch job family) -> top-k samples,
+    # string quartiles, phase B and the tuple passes of its arrays;
+    # phase B -> classification and the pattern job. Total wall-clock
+    # is the critical path of the slowest context, not the sum over
+    # contexts — at toy scale this hides per-job scheduling latency,
+    # at scale it keeps the cluster busy across the small tail stages.
+    #
     # cap concurrency: each agg job compiles a generated class, and
     # compiling many simultaneously can exhaust the JVM heap. Phase A
     # chunks every context to <= _CHUNK_LEAVES leaves per job and
@@ -1138,16 +1082,148 @@ def _analyze(df: DataFrame, cfg: AnalyzerConfig,
         return d.agg(*build()).collect()[0].asDict()
 
     with ThreadPoolExecutor(max_workers=n_workers) as pool:
-        a_futs = {}
-        remaining: Dict[int, int] = {}
-        ctx_groups = []
-        for ctx in contexts:
-            groups = _phase_a_job_builders(
-                ctx.leaves, ctx.length_leaves, cfg)
-            remaining[ctx.id] = len(groups)
-            rows[ctx.id] = {"__rows__": None}
-            ctx_groups.append((ctx, groups))
-        if materialize_first and ctx_groups:
+        steps: Dict = {}
+
+        def submit(step, fn, *args):
+            fut = pool.submit(fn, *args)
+            steps[fut] = step
+            return fut
+
+        def leaf_stats(d: DataFrame, leaves: List[_Leaf],
+                       length_leaves: List[_Leaf], after_a, after_b):
+            """Phase A then phase B over ``d``. Returns the phase-A
+            jobs as ``submit`` arguments; when the last one lands,
+            ``after_a(row)`` runs and phase B is submitted, and
+            ``after_b(row)`` runs once phase B is in the row."""
+            builders = _phase_a_job_builders(leaves, length_leaves, cfg)
+            row: Dict = {"__rows__": None}
+            left = [len(builders)]
+
+            def b_landed(res):
+                row.update(res)
+                after_b(row)
+
+            def a_landed(res):
+                row.update(res)
+                left[0] -= 1
+                if not left[0]:
+                    after_a(row)
+                    submit(b_landed, _phase_b_row, d, leaves, row, cfg)
+
+            return [(a_landed, _agg_job, d, build) for build in builders]
+
+        def context_a(ctx: _Context, row: Dict):
+            rows[ctx.id] = row
+            for leaf in ctx.length_leaves:
+                k = leaf.key
+                length_stats[leaf.path] = LengthStats(
+                    card=row.get(f"{k}__card") or 0,
+                    min=row.get(f"{k}__min"), max=row.get(f"{k}__max"))
+
+            def worth_sampling(leaf: _Leaf) -> bool:
+                # a frequency sample only means something when values
+                # repeat; skipping near-unique columns (key columns)
+                # keeps the top-k shuffle proportional to the REPEATED
+                # values only — at 100 TB this is the difference
+                # between shuffling every key once and shuffling a few
+                # hundred distinct values
+                card = row.get(f"{leaf.key}__card") or 0
+                distinct = row.get(f"{leaf.key}__distinct") or 0
+                return card <= 10_000 or distinct < 0.9 * card
+
+            sampleable = {
+                leaf.key: leaf for leaf in ctx.leaves
+                if isinstance(leaf.dtype,
+                              (T.StringType, T.BooleanType,
+                               T.LongType, T.IntegerType))
+                and worth_sampling(leaf)
+            }
+            string_leaves = {
+                leaf.key: leaf for leaf in ctx.leaves
+                if isinstance(leaf.dtype, T.StringType)
+            }
+
+            def took_samples(res):
+                topk.update(res[0])
+                botk.update(res[1])
+
+            # in exact mode both the top-k job and the string-quartile
+            # job consume groupBy(leaf, value) counts; build that
+            # relation ONCE over the union of their leaves and run both
+            # consumers in one pool task — materializing the cache
+            # before the first consumer, because two tasks racing an
+            # unmaterialized cache would each recompute it (the very
+            # scan this saves)
+            if cfg.exact and sampleable and string_leaves:
+                def _shared_value_stats():
+                    shared = _counted_values(
+                        ctx, {**string_leaves, **sampleable}).persist()
+                    try:
+                        shared.count()
+                        t, b = _collect_topk(ctx, sampleable, shared)
+                        q = _collect_string_quartiles(
+                            ctx, string_leaves, cfg, shared)
+                        return t, b, q
+                    finally:
+                        shared.unpersist()
+
+                def took_shared(res):
+                    took_samples(res)
+                    str_q.update(res[2])
+
+                submit(took_shared, _shared_value_stats)
+            else:
+                submit(took_samples, _collect_topk, ctx, sampleable)
+                submit(str_q.update, _collect_string_quartiles,
+                       ctx, string_leaves, cfg)
+
+            for path, (ctx_id, expr, elem_dt) in array_srcs.items():
+                if ctx_id != ctx.id:
+                    continue
+                ls = length_stats.get(path)
+                leaves = _tuple_leaves(path, expr, elem_dt, ls, cfg)
+                if leaves:
+                    for job in leaf_stats(
+                            ctx.df, leaves, [], lambda _row: None,
+                            partial(tuple_b, path, leaves, ls)):
+                        submit(*job)
+
+        def context_b(ctx: _Context, row: Dict):
+            # classify every leaf; fixed-width plain strings then get
+            # their char patterns induced
+            fixed = {}
+            for leaf in ctx.leaves:
+                node = _classify_leaf(leaf, row, cfg, row["__rows__"])
+                leaf_nodes[leaf.path] = node
+                if (isinstance(node, StrT) and not isinstance(node, URLT)
+                        and node.lengths.fixed and node.lengths.min
+                        and 0 < node.lengths.min <= _MAX_PATTERN_LEN):
+                    fixed[leaf.key] = leaf
+            if fixed:
+                submit(partial(took_patterns, fixed),
+                       _collect_patterns, ctx, fixed)
+
+        def took_patterns(fixed: Dict[str, _Leaf], res: Dict[str, list]):
+            for key, positions in res.items():
+                path = fixed[key].path
+                leaf_nodes[path] = replace(
+                    leaf_nodes[path],
+                    pattern=tuple(induce_pattern(positions)))
+
+        def tuple_b(path, leaves: List[_Leaf], ls: LengthStats, row: Dict):
+            fields = []
+            for i, leaf in enumerate(leaves):
+                node = _classify_leaf(leaf, row, cfg, row["__rows__"])
+                card = row.get(f"{leaf.key}__card") or 0
+                fields.append(FieldT(key=i, value=node, count=card,
+                                     optional=bool(card < ls.card)))
+            tuple_nodes[path] = TupleT(fields=tuple(fields), lengths=ls)
+
+        wave = [job for ctx in contexts
+                for job in leaf_stats(ctx.df, ctx.leaves, ctx.length_leaves,
+                                      partial(context_a, ctx),
+                                      partial(context_b, ctx))]
+        if materialize_first:
             # the input was freshly persisted but NOT materialized
             # (_prepare_input): run the root context's first phase-A
             # job as a barrier — its scan materializes the cache as
@@ -1155,106 +1231,19 @@ def _analyze(df: DataFrame, cfg: AnalyzerConfig,
             # into real analysis work; everything after it reads the
             # in-memory columnar relation, never racing the cache
             # into recomputing partitions
-            ctx0, groups0 = ctx_groups[0]
-            fut0 = pool.submit(_agg_job, ctx0.df, groups0[0])
-            a_futs[fut0] = ctx0.id
-            fut0.result()
-            ctx_groups[0] = (ctx0, groups0[1:])
-        for ctx, groups in ctx_groups:
-            for build in groups:
-                a_futs[pool.submit(_agg_job, ctx.df, build)] = ctx.id
-        dep_futs = []
-        pending = set(a_futs)
-        while pending:
-            done, pending = _fwait(pending, return_when=FIRST_COMPLETED)
+            submit(*wave.pop(0)).result()
+        for job in wave:
+            submit(*job)
+        while steps:
+            done, _ = _fwait(list(steps), return_when=FIRST_COMPLETED)
             for fut in done:
-                ctx = ctx_by_id[a_futs[fut]]
-                rows[ctx.id].update(fut.result())
-                remaining[ctx.id] -= 1
-                if remaining[ctx.id]:
-                    continue
-                # this context's phase A is complete: fan out its
-                # dependent jobs without waiting for other contexts
-                row = rows[ctx.id]
+                steps.pop(fut)(fut.result())
 
-                def worth_sampling(leaf: _Leaf, row=row) -> bool:
-                    # a frequency sample only means something when
-                    # values repeat; skipping near-unique columns (key
-                    # columns) keeps the top-k shuffle proportional to
-                    # the REPEATED values only — at 100 TB this is the
-                    # difference between shuffling every key once and
-                    # shuffling a few hundred distinct values
-                    card = row.get(f"{leaf.key}__card") or 0
-                    distinct = row.get(f"{leaf.key}__distinct") or 0
-                    return card <= 10_000 or distinct < 0.9 * card
-
-                sampleable = {
-                    leaf.key: leaf for leaf in ctx.leaves
-                    if isinstance(leaf.dtype,
-                                  (T.StringType, T.BooleanType,
-                                   T.LongType, T.IntegerType))
-                    and worth_sampling(leaf)
-                }
-                string_leaves = {
-                    leaf.key: leaf for leaf in ctx.leaves
-                    if isinstance(leaf.dtype, T.StringType)
-                }
-                # in exact mode both the top-k job and the string-
-                # quartile job consume groupBy(leaf, value) counts;
-                # build that relation ONCE over the union of their
-                # leaves and run both consumers in one pool task —
-                # materializing the cache before the first consumer,
-                # because two tasks racing an unmaterialized cache
-                # would each recompute it (the very scan this saves)
-                if (cfg.exact and cfg.collect_samples
-                        and sampleable and string_leaves):
-                    def _shared_value_stats(ctx=ctx,
-                                            sampleable=sampleable,
-                                            string_leaves=string_leaves):
-                        shared = _counted_values(
-                            ctx, {**string_leaves, **sampleable}
-                        ).persist()
-                        try:
-                            shared.count()
-                            t, b = _collect_topk(
-                                ctx, sampleable, cfg, shared)
-                            q = _collect_string_quartiles(
-                                ctx, string_leaves, cfg, shared)
-                            return t, b, q
-                        finally:
-                            shared.unpersist()
-
-                    tq_fut = pool.submit(_shared_value_stats)
-                    q_fut = None
-                else:
-                    tq_fut = pool.submit(
-                        _collect_topk, ctx, sampleable, cfg)
-                    q_fut = pool.submit(_collect_string_quartiles,
-                                        ctx, string_leaves, cfg)
-                dep_futs.append((
-                    ctx.id, tq_fut,
-                    pool.submit(_phase_b_row, ctx.df, ctx.leaves,
-                                row, cfg),
-                    q_fut))
-        for cid, tq_fut, b_fut, q_fut in dep_futs:
-            if q_fut is None:
-                t, b, q = tq_fut.result()
-            else:
-                t, b = tq_fut.result()
-                q = q_fut.result()
-            topk.update(t)
-            botk.update(b)
-            rows[cid].update(b_fut.result())
-            str_q.update(q)
-
-    # classify every leaf
-    leaf_nodes: Dict[Tuple[str, ...], Node] = {}
-    leaf_by_path: Dict[Tuple[str, ...], _Leaf] = {}
-    length_stats: Dict[Tuple[str, ...], LengthStats] = {}
+    # top-k samples and lexicographic quartiles decorate the classified
+    # leaves
     for ctx in contexts:
-        row = rows[ctx.id]
         for leaf in ctx.leaves:
-            node = _classify_leaf(leaf, row, cfg, row["__rows__"])
+            node = leaf_nodes[leaf.path]
             if leaf.key in topk and isinstance(node, (StrT, BoolT, IntT)):
                 node = replace(node, stats=replace(
                     node.stats, sample=tuple(topk[leaf.key]),
@@ -1267,30 +1256,6 @@ def _analyze(df: DataFrame, cfg: AnalyzerConfig,
                 node = replace(node, stats=replace(
                     node.stats, q1=q1, q2=q2, q3=q3))
             leaf_nodes[leaf.path] = node
-            leaf_by_path[leaf.path] = leaf
-        for leaf in ctx.length_leaves:
-            k = leaf.key
-            length_stats[leaf.path] = LengthStats(
-                card=row.get(f"{k}__card") or 0,
-                min=row.get(f"{k}__min"), max=row.get(f"{k}__max"))
-
-    # second pass: induce char patterns for fixed-width plain strings
-    for ctx in contexts:
-        fixed = {}
-        for leaf in ctx.leaves:
-            node = leaf_nodes.get(leaf.path)
-            if (isinstance(node, StrT) and not isinstance(node, URLT)
-                    and node.lengths.fixed and node.lengths.min
-                    and 0 < node.lengths.min <= cfg.max_pattern_len):
-                fixed[leaf.key] = leaf
-        for key, positions in _collect_patterns(ctx, fixed, cfg).items():
-            leaf = fixed[key]
-            node = leaf_nodes[leaf.path]
-            leaf_nodes[leaf.path] = replace(
-                node, pattern=tuple(induce_pattern(positions)))
-
-    # tuple induction: fixed-width short arrays -> positional tuples
-    tuple_nodes = _induce_tuples(contexts, array_srcs, length_stats, cfg)
 
     # assemble the tree from the schema
     row0 = rows[0]
@@ -1435,7 +1400,7 @@ def classify_values(values: Sequence[str], cfg: AnalyzerConfig) -> Node:
 
     lens = {len(v) for v in values}
     pattern = None
-    if len(lens) == 1 and 0 < next(iter(lens)) <= cfg.max_pattern_len:
+    if len(lens) == 1 and 0 < next(iter(lens)) <= _MAX_PATTERN_LEN:
         width = next(iter(lens))
         pos_sets = [(i, {v[i] for v in values}) for i in range(width)]
         pattern = tuple(induce_pattern(pos_sets))

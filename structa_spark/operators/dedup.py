@@ -595,26 +595,31 @@ def hamming_near_duplicates(sig_df: DataFrame, id_col: str = "doc_id",
                             sig_col: str = "sh",
                             max_hamming: int = 3,
                             bits: int = SIMHASH_BITS,
-                            max_bucket: int = 10_000) -> DataFrame:
+                            max_bucket: int = 10_000,
+                            frame_col: Optional[str] = None) -> DataFrame:
     """Near-dup pairs among PRECOMPUTED ``bits``-wide signatures by
     Hamming distance — the pigeonhole core of
     :func:`simhash_near_duplicates`, factored so any signature family
-    (text simhash, image dhash, audio fingerprints) reuses the same
-    full-recall bucketing, capped expansion and exact popcount
-    verification. Input: one ``(id, signature)`` row per item."""
+    (text simhash, image dhash, audio fingerprints, video frames)
+    reuses the same full-recall bucketing, capped expansion and exact
+    popcount verification. Input: one ``(id, signature)`` row per
+    item. With ``frame_col`` (see :func:`framewise_hamming_pairs`)
+    that column joins the bucket key, so candidates only pair rows
+    with equal values of it, and it is carried into the output."""
     n_blocks = max_hamming + 1
     block_size = -(-bits // n_blocks)  # ceil
-    s = sig_df.select(F.col(id_col), F.col(sig_col).alias("sh"))
+    keys = [frame_col] if frame_col else []
+    s = sig_df.select(F.col(id_col), *keys, F.col(sig_col).alias("sh"))
     mask = (1 << block_size) - 1
     blocks = F.array(*[
         F.struct(F.lit(j).alias("blk"),
                  F.shiftrightunsigned(F.col("sh"), j * block_size)
                  .bitwiseAND(F.lit(mask)).alias("blk_val"))
         for j in range(n_blocks)])
-    bucketed = (s.select(F.col(id_col), F.col("sh"),
+    bucketed = (s.select(F.col(id_col), *keys, F.col("sh"),
                          F.explode(blocks).alias("b"))
-                .select(id_col, "sh", "b.blk", "b.blk_val"))
-    grouped = (bucketed.groupBy("blk", "blk_val")
+                .select(id_col, *keys, "sh", "b.blk", "b.blk_val"))
+    grouped = (bucketed.groupBy(*keys, "blk", "blk_val")
                .agg(F.collect_list(
                    F.struct(F.col(id_col).alias("id"),
                             F.col("sh"))).alias("members"))
@@ -626,18 +631,20 @@ def hamming_near_duplicates(sig_df: DataFrame, id_col: str = "doc_id",
     # array_sort runs BEFORE the exchange so it evaluates once per
     # bucket, not once per exploded member row.
     grouped = (grouped
-               .select(F.array_sort("members").alias("mem"))
+               .select(*keys, F.array_sort("members").alias("mem"))
                .repartition(
                    sig_df.sparkSession.sparkContext
                    .defaultParallelism))
-    members = grouped.select("mem",
+    members = grouped.select(*keys, "mem",
                              F.posexplode("mem").alias("i", "a"))
     return (members.select(
+        *keys,
         F.col("a"),
         F.explode(F.slice(F.col("mem"), F.col("i") + 2,
                           F.size("mem"))).alias("b"))
         .select(F.col("a.id").alias("id_a"),
                 F.col("b.id").alias("id_b"),
+                *keys,
                 hamming_distance(F.col("a.sh"), F.col("b.sh"))
                 .alias("hamming"))
         .where(F.col("hamming") <= max_hamming)
@@ -656,51 +663,14 @@ def framewise_hamming_pairs(sig_df: DataFrame,
     ``(id, frame, signature)`` row per sampled frame, and candidates
     only form between the SAME frame index of two different videos
     (frame 3 of A vs frame 3 of B — alignment is what makes the
-    per-frame distances composable into a whole-video verdict).
-    Implementation is the identical full-recall pigeonhole with the
-    frame index added to the bucket key, so buckets stay small even
-    when every video shares a popular hash at some OTHER index; one
-    bucket shuffle, capped expansion, exact popcount verify. Returns
-    distinct ``(id_a, id_b, frame, hamming)`` rows with
+    per-frame distances composable into a whole-video verdict). The
+    frame index joins the bucket key, so buckets stay small even
+    when every video shares a popular hash at some OTHER index.
+    Returns distinct ``(id_a, id_b, frame, hamming)`` rows with
     ``id_a < id_b``."""
-    n_blocks = max_hamming + 1
-    block_size = -(-bits // n_blocks)  # ceil
-    s = sig_df.select(F.col(id_col), F.col(frame_col).alias("frm"),
-                      F.col(sig_col).alias("sh"))
-    mask = (1 << block_size) - 1
-    blocks = F.array(*[
-        F.struct(F.lit(j).alias("blk"),
-                 F.shiftrightunsigned(F.col("sh"), j * block_size)
-                 .bitwiseAND(F.lit(mask)).alias("blk_val"))
-        for j in range(n_blocks)])
-    bucketed = (s.select(F.col(id_col), F.col("frm"), F.col("sh"),
-                         F.explode(blocks).alias("b"))
-                .select(id_col, "frm", "sh", "b.blk", "b.blk_val"))
-    grouped = (bucketed.groupBy("frm", "blk", "blk_val")
-               .agg(F.collect_list(
-                   F.struct(F.col(id_col).alias("id"),
-                            F.col("sh"))).alias("members"))
-               .where(F.size("members").between(2, max_bucket)))
-    grouped = (grouped
-               .select(F.col("frm"),
-                       F.array_sort("members").alias("mem"))
-               .repartition(
-                   sig_df.sparkSession.sparkContext
-                   .defaultParallelism))
-    members = grouped.select(F.col("frm"), F.col("mem"),
-                             F.posexplode("mem").alias("i", "a"))
-    return (members.select(
-        F.col("frm"),
-        F.col("a"),
-        F.explode(F.slice(F.col("mem"), F.col("i") + 2,
-                          F.size("mem"))).alias("b"))
-        .select(F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                F.col("frm").alias(frame_col),
-                hamming_distance(F.col("a.sh"), F.col("b.sh"))
-                .alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
-        .distinct())
+    return hamming_near_duplicates(
+        sig_df, id_col=id_col, sig_col=sig_col, max_hamming=max_hamming,
+        bits=bits, max_bucket=max_bucket, frame_col=frame_col)
 
 
 def dedup_corpus(df: DataFrame, text_col: str = "text",

@@ -293,6 +293,12 @@ def detect_csv_dialect(sample: bytes, encoding: str):
     line (reference: structa/source.py:205-224 uses csv.Sniffer; this
     is the same contract without the stdlib's corner-case failures)."""
     text = sample[:8192].decode(encoding, errors="replace")
+    if len(sample) >= 8192:
+        # the window cut the file mid-row: a partial last line would
+        # under-count every delimiter and disqualify the real one
+        end = max(text.rfind("\n"), text.rfind("\r"))
+        if end > 0:
+            text = text[:end + 1]
     lines = [ln for ln in text.splitlines() if ln.strip()]
     body = lines[1:] if len(lines) > 1 else lines
     best, best_score = ",", -1.0

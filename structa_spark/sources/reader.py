@@ -128,27 +128,23 @@ def _fallback_if_corrupt(spark: SparkSession, df: DataFrame,
     cols = set(df.columns)
     if cols and cols != {"_corrupt_record"}:
         return df
-    return _read_json_documents(spark, path)
+    return _read_documents(spark, spark.sparkContext.wholeTextFiles(path),
+                           lambda kv: json.loads(kv[1]))
 
 
-def _read_json_documents(spark: SparkSession, path: str) -> DataFrame:
-    """Whole-document JSON parse in executors (parallel by file
-    count); top-level arrays flatten to rows, scalar items are wrapped
-    in VALUE_COL so the result is a DataFrame."""
-    rdd = spark.sparkContext.wholeTextFiles(path)
+def _read_documents(spark: SparkSession, files, parse) -> DataFrame:
+    """Whole-file documents parsed in executors (parallel by file
+    count): ``parse`` maps one ``(path, content)`` pair of the
+    ``files`` RDD to a document. A top-level list flattens to rows,
+    and an item that is not a dict is wrapped in VALUE_COL; the rows
+    go to Spark as JSON strings so its schema inference stays in
+    charge."""
+    def rows(kv):
+        data = parse(kv)
+        for it in data if isinstance(data, list) else [data]:
+            yield json.dumps(it if isinstance(it, dict) else {VALUE_COL: it})
 
-    def parse(kv):
-        import json as _j
-        _, text = kv
-        data = _j.loads(text)
-        items = data if isinstance(data, list) else [data]
-        for it in items:
-            if isinstance(it, dict):
-                yield _j.dumps(it)
-            else:
-                yield _j.dumps({VALUE_COL: it})
-
-    return spark.read.json(rdd.flatMap(parse))
+    return spark.read.json(files.flatMap(rows))
 
 
 def read_yaml(spark: SparkSession, path: str,
@@ -164,20 +160,12 @@ def read_yaml(spark: SparkSession, path: str,
     except ImportError as e:     # pragma: no cover
         raise NotImplementedError("pyyaml not available") from e
 
-    rdd = spark.sparkContext.wholeTextFiles(path)
-
     def parse(kv):
         import yaml as _y
-        _, text = kv
-        data = _y.safe_load(text)
-        items = data if isinstance(data, list) else [data]
-        for item in items:
-            if isinstance(item, dict):
-                yield json.dumps(item)
-            else:
-                yield json.dumps({VALUE_COL: item})
+        return _y.safe_load(kv[1])
 
-    return spark.read.json(rdd.flatMap(parse))
+    return _read_documents(
+        spark, spark.sparkContext.wholeTextFiles(path), parse)
 
 
 def _strip_ns(t: str) -> str:
@@ -261,10 +249,7 @@ def read_xml(spark: SparkSession, path: str,
     unsplittable, same as multiLine JSON). Entity-expansion attacks
     are bounded by expat's built-in billion-laughs amplification
     limits; external entities are never fetched by ElementTree."""
-    rdd = spark.sparkContext.binaryFiles(path)
-
     def parse(kv):
-        import json as _j
         import re as _re
         import xml.etree.ElementTree as _ET
         _, content = kv
@@ -283,26 +268,18 @@ def read_xml(spark: SparkSession, path: str,
             except (_ET.ParseError, LookupError):
                 root = None
         if root is None:
-            yield _j.dumps({"_corrupt_xml":
-                            content[:1024].decode("utf-8",
-                                                  errors="replace")})
-            return
+            return {"_corrupt_xml":
+                    content[:1024].decode("utf-8", errors="replace")}
 
         list_tags = _xml_list_tags(root)
         children = list(root)
         tags = {_strip_ns(c.tag) for c in children}
         if len(children) >= 2 and len(tags) == 1 and not root.attrib:
-            items = [_xml_element_to_obj(c, list_tags)
-                     for c in children]
-        else:
-            items = [_xml_element_to_obj(root, list_tags)]
-        for it in items:
-            if isinstance(it, dict):
-                yield _j.dumps(it)
-            else:
-                yield _j.dumps({VALUE_COL: it})
+            return [_xml_element_to_obj(c, list_tags) for c in children]
+        return _xml_element_to_obj(root, list_tags)
 
-    return spark.read.json(rdd.flatMap(parse))
+    return _read_documents(
+        spark, spark.sparkContext.binaryFiles(path), parse)
 
 
 def open_sources(spark: SparkSession, paths: List[str],

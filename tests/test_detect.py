@@ -118,6 +118,22 @@ def test_csv_dialect_pipes():
     assert delim == "|"
 
 
+def test_csv_dialect_ignores_row_cut_by_sample_window():
+    # the 8 KB window ends right after the timestamp of a row: that
+    # partial line holds no ',' but the two ':' of HH:MM:SS
+    rows = [f"2024-01-{1 + i % 28:02d} 03:04:05,ab,{i % 10}\n"
+            for i in range(400)]
+    ts_len = len("2024-01-01 03:04:05")
+    n_full = (8192 - ts_len) // len(rows[0])
+    pad = 8192 - ts_len - n_full * len(rows[0])
+    assert pad >= len("ts,code,n\n")
+    header = "ts,code,n".ljust(pad - 1) + "\n"
+    sample = (header + "".join(rows)).encode()
+    assert sample[:8192].endswith(rows[n_full][:ts_len].encode())
+    delim, _, _ = detect_csv_dialect(sample, "utf-8")
+    assert delim == ","
+
+
 # -- integrated sniff ------------------------------------------------------
 
 def test_sniff_csv_end_to_end():

@@ -162,8 +162,8 @@ def test_profile_jobs_stay_whole_stage_codegen(spark):
     cfg = A.AnalyzerConfig()
     contexts, _arrs, _tabs = A._plan(df, cfg)
     ctx = contexts[0]
-    jobs = A._phase_a_jobs(ctx.leaves, ctx.length_leaves, cfg)
-    scalar_job = df.agg(*jobs[0])
+    exprs = A._phase_a_job_builders(ctx.leaves, ctx.length_leaves, cfg)[0]()
+    scalar_job = df.agg(*exprs)
     scalar_job.collect()          # resolve AQE to the final plan
     plan = scalar_job._jdf.queryExecution().executedPlan().toString()
     # invariants: no imperative sketch leaked into the scalar job
@@ -233,9 +233,6 @@ def test_phase_a_builders_match_eager_jobs(spark):
     flat = [s for job in built_strs for s in job]
     assert len([s for s in flat if "__rows__" in s]) == 1
     assert any("__rows__" in s for s in built_strs[0])
-    # eager form stays a faithful wrapper (aux single-context paths)
-    eager = A._phase_a_jobs(ctx.leaves, ctx.length_leaves, cfg)
-    assert [[str(c) for c in job] for job in eager] == expected
     # leaf snapshot: mutating a planner leaf AFTER layout must not
     # change what a deferred builder constructs (ADVICE r11)
     builders2 = A._phase_a_job_builders(
@@ -246,6 +243,65 @@ def test_phase_a_builders_match_eager_jobs(spark):
         assert [str(c) for c in builders2[0]()] == built_strs[0]
     finally:
         ctx.leaves[0].expr = old_expr
+
+
+def _nested_profile_frame(spark):
+    # a fixed-width short array (a tuple), a fixed-width string inside
+    # an array of records (a pattern job in a child context) and a
+    # struct wider than field_threshold (the unpivot path)
+    from pyspark.sql import types as _T
+
+    wide = _T.StructType([_T.StructField(f"k{j:02d}", _T.LongType())
+                          for j in range(24)])
+    schema = _T.StructType([
+        _T.StructField("pt", _T.ArrayType(_T.LongType())),
+        _T.StructField("recs", _T.ArrayType(_T.StructType([
+            _T.StructField("code", _T.StringType()),
+            _T.StructField("n", _T.StringType())]))),
+        _T.StructField("wide", wide),
+        _T.StructField("tag", _T.StringType()),
+    ])
+    rows = [([i, i * 2, i % 3],
+             [(f"Q{i % 50:02d}", str(i)), (f"R{i % 7:02d}", str(-i))],
+             tuple(i + j for j in range(24)),
+             f"T{i % 7}")
+            for i in range(60)]
+    return spark.createDataFrame(rows, schema)
+
+
+_NESTED_RENDER = (
+    "{ 'pt': ( int range=0..59, int range=0..118, int range=0..2 ), "
+    "'recs': [ { 'code': str range=Q00..R06 pattern=\"Idd\", "
+    "'n': str of int range=-59..59 pattern=\"d\" } ], "
+    "'wide': { str range=k00..k23 pattern=\"kdd\": int range=0..82 }, "
+    "'tag': str range=T0..T6 pattern=\"To\" }")
+_SKETCH_NOTE = ("\n# note: string q1-q3 omitted (sketch mode; rerun with "
+                "exact=True for lexicographic quartiles)")
+
+
+@pytest.mark.parametrize("exact,n_jobs,rendered", [
+    (False, 44, _NESTED_RENDER + _SKETCH_NOTE),
+    (True, 64, _NESTED_RENDER),
+])
+def test_analyze_nested_jobs_and_rendering(spark, exact, n_jobs, rendered):
+    # pins the analyzer's job set and its output on a frame that takes
+    # every job family: phase A/B per context, top-k samples, string
+    # quartiles (exact mode), char patterns and a tuple pass. Job ids
+    # are sequential, so the newest id before and after the call
+    # bounds every job the call submitted, from whichever thread.
+    from structa_spark import analyze
+    df = _nested_profile_frame(spark)
+    jsc = spark.sparkContext._jsc.sc()
+
+    def newest_job_id():
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(None)
+        return jobs.apply(0).jobId() if jobs.size() else -1
+
+    before = newest_job_id()
+    profile = analyze(df, exact=exact)
+    assert newest_job_id() - before == n_jobs
+    assert profile.render() == rendered
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
