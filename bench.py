@@ -5,37 +5,62 @@
 Prints ONE JSON line:
 {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-The suite covers each engine pillar at its *scale path* (LSH/approx
-variants, not the quadratic oracle paths):
+The suite is every query registered with a ``bench=`` alias
+(structa_spark/queries.py) plus the engine pillars at their *scale
+path* (LSH/approx variants, not the quadratic oracle paths the
+registry pins):
   profile_lineitem   - the structure-inference engine itself
-  q1/q3/q5           - agg + broadcast joins on the fact table
-  window_topk        - partitioned window
+  profile_documents  - the same over the text corpus
   minhash_candidates - LSH near-dup candidate pairs (documents)
   simhash_pairs      - simhash bucketed near-dups
-  token_stats        - text analysis scan
-  cosine_topk        - brute-force ANN baseline (broadcast queries)
   neardup_lsh        - SRP-bucketed embedding near-dups
-  decontaminate      - eval-set n-gram overlap (broadcast eval side)
-  unigram_nll        - unigram-LM perplexity proxy (one-plan join)
-  semantic_dedup     - SemDeDup cluster + within-cluster drop
-  (+ repetition, passage_dedup, pq_adc_topk, training_manifest,
-   tfidf — the corpus-pipeline scale paths)
+  containment        - LSH candidates verified over the full corpus
+  winnow_overlap     - full-corpus winnowing overlap
+
+Other knobs: SPARK_GRAFT_BENCH_RUNS (timed passes, default 3),
+SPARK_GRAFT_BENCH_WARMUP / _LADDER_UP / _DOCLEN (0 skips that block),
+SPARK_GRAFT_LADDER_DIR / SPARK_GRAFT_LADDER_UP_DIR (the lower and
+upper row-count tiers), SPARK_GRAFT_FULL_PATH /
+SPARK_GRAFT_MEDIANS_PATH (where the artifacts land).
 """
 
+import functools
+import hashlib
 import json
+import math
 import os
+import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+N_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
+LADDER_DIR = os.environ.get("SPARK_GRAFT_LADDER_DIR",
+                            "/root/testdata/sf0.01")
+# the OPTIONAL local sf1 fixture (scripts/gen_sf1.py, 10x sf0.1,
+# gitignored); fresh clones skip the upper tier silently
+LADDER_UP_DIR = os.environ.get(
+    "SPARK_GRAFT_LADDER_UP_DIR",
+    os.path.join(REPO, "spark-warehouse", "sf1"))
+
+# a pass does not start while the 1-minute loadavg exceeds this
+# (reruns above it are methodology noise by the established
+# adjudication protocol)
+MAX_LOADAVG = 10.0
+# wall-clock budget for the whole upper tier (measured ~200 s for the
+# full suite at sf1): once exceeded, the remaining queries record as
+# skipped — partial 3-point evidence beats a lost bench window
+LADDER_UP_BUDGET = 300.0
+# extra alternated passes for a doc-length op reading super-linear
+DOCLEN_RETRIES = 4
 
 
-def main():
+def session():
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
     spark = (SparkSession.builder
              .master(f"local[{CPUS}]")
@@ -52,291 +77,250 @@ def main():
              .appName("structa-spark-bench")
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
+
+def _df_entry(build):
+    """Suite entry timing ``build().count()``. ``_df`` exposes the
+    builder so the warm-up pass can fingerprint the optimized plan
+    without re-running the (possibly model-building) query."""
+    def thunk():
+        return build().count()
+    thunk._df = build
+    return thunk
+
+
+def _profile_entry(spark, sf_dir, table):
+    """Suite entry timing the profiler's multi-job inference loop.
+    There is no one DataFrame to fingerprint, so ``_fp`` hashes the
+    RENDERED profile instead (a result fingerprint: stable across
+    boxes, changes when the inference pipeline changes)."""
     from structa_spark import analyze
-    from structa_spark.operators import dedup, similarity, text
-    from structa_spark.queries import (
-        asof_purchase_click, bigram_nll, c4_line_clean,
-        ccnet_perplexity_buckets, contamination_check,
-        corpus_filter_report,
-        cosine_topk, decoded_media_stats, decompressed_text_stats,
-        gopher_dup_fractions, gopher_quality_flags, hybrid_rrf_topk,
-        kn_bigram_nll,
-        int8_topk_search, json_props_stats, mixed_resample_counts,
-        audio_envelope_hashes, diverse_sample_by_cluster,
-        image_dhash_values, nb_lang_confusion,
-        passage_dedup_summary, pq_adc_topk, q1_pricing_summary,
-        repetition_ngram_profile, scrub_eval_spans,
-        fuzzy_contamination_pairs,
-        q3_top_orders, q5_nation_revenue, repetition_signals,
-        rollup_nation_year, semantic_dedup_summary, sessionize_events,
-        dsir_resample_topk,
-        source_curation_report, source_curation_report_v2,
-        source_token_jsd, span_dedup_texts,
-        tfidf_top_terms, token_stats_by_lang, top_orders_per_customer,
-        training_manifest, unigram_nll, windowed_event_stats,
-        host_curation_report, host_policy_filter,
-        image_dedup_keep, audio_dedup_keep,
-        bloom_contamination_flags, host_pagerank,
-        cms_heavy_hitters,
-        longest_dup_span_report, unigram_tokenizer_vocab,
-        audio_spectral_features, host_policy_v2,
-        image_entropy_stats, unigram_encode_fertility,
-        quality_gopher_calibration, embedding_health_report,
-        host_hits_scores, audio_clipping_stats,
-        wordpiece_merge_candidates, video_frame_index,
-        encoding_quality_report, source_vocab_overlap,
-        heaps_vocab_growth,
-        pdf_extracted_text, video_dup_groups, audio_mfcc_features,
-        docx_extracted_text, markdown_extracted_text,
-        blocklist_screen, doremi_domain_weights,
-        matryoshka_recall_at_k, office_extracted_text,
-        fim_split_coords, bitext_margin_pairs, jpeg_quality_screen,
-        epub_extracted_text, pptx_extracted_text,
-        xlsx_extracted_text, quality_classifier_scores,
-        audio_vad_segments, code_quality_flags, pii_card_scan,
-        latex_extracted_text, bm25_topk, video_scene_cuts,
-        html_link_extract, host_boilerplate_clean,
-        robots_policy_check, hard_negative_topk, mojibake_repair,
-        alpha_lang_weights, audio_resample, sentence_align_beads,
-        pii_iban_scan, anchor_text_profile,
-        ipynb_extracted_cells, subtitle_extracted_cues,
-        code_license_screen, preference_pairs,
-        chat_template_render, kmeans_cluster_profile,
-        weighted_sample_by_source, length_bucket_batches,
-        confusable_spoof_screen, html_table_extract,
-    )
     from structa_spark.sources.tables import load_table
 
-    def make_suite(sf_dir):
-        def bench_profile():
-            p = analyze(load_table(spark, sf_dir, "lineitem"))
-            return p.row_count
+    def thunk():
+        return analyze(load_table(spark, sf_dir, table)).row_count
 
-        def bench_profile_docs():
-            p = analyze(load_table(spark, sf_dir, "documents"))
-            return p.row_count
+    def fingerprint():
+        p = analyze(load_table(spark, sf_dir, table))
+        return "render:" + hashlib.md5(
+            p.render().encode()).hexdigest()[:16]
 
-        # the profile entries run a multi-job inference loop, not one
-        # DataFrame — their fingerprint is the md5 of the RENDERED
-        # profile (a result fingerprint: stable across boxes, changes
-        # when the inference pipeline changes), so every suite entry
-        # carries SOME drift-attribution handle
-        def _profile_fp(table):
-            import hashlib as _h
-            p = analyze(load_table(spark, sf_dir, table))
-            return "render:" + _h.md5(
-                p.render().encode()).hexdigest()[:16]
+    thunk._fp = fingerprint
+    return thunk
 
-        bench_profile._fp = lambda: _profile_fp("lineitem")
-        bench_profile_docs._fp = lambda: _profile_fp("documents")
 
-        def df_thunk(build):
-            def thunk():
-                return build().count()
-            thunk._df = build
-            return thunk
+def make_suite(spark, sf_dir):
+    """Entry name -> thunk for every bench query at ``sf_dir``."""
+    from structa_spark.operators import dedup, similarity
+    from structa_spark.queries import BENCH, REGISTRY
+    from structa_spark.sources.tables import load_table
 
-        bench_minhash = df_thunk(lambda: dedup.minhash_candidates(
-            load_table(spark, sf_dir, "documents")))
-        bench_simhash = df_thunk(
-            lambda: dedup.simhash_near_duplicates(
-                load_table(spark, sf_dir, "documents")))
-        bench_neardup_lsh = df_thunk(
+    def docs():
+        return load_table(spark, sf_dir, "documents")
+
+    def containment():
+        # LSH candidates verified with array_intersect over the full
+        # table — never the labeled quadratic oracle slice the
+        # registry query uses
+        d = docs()
+        return dedup.containment_pairs(
+            d, threshold=0.5, candidates=dedup.minhash_candidates(d))
+
+    suite = {
+        "profile_lineitem": _profile_entry(spark, sf_dir, "lineitem"),
+        "profile_documents": _profile_entry(spark, sf_dir, "documents"),
+        "minhash_candidates": _df_entry(
+            lambda: dedup.minhash_candidates(docs())),
+        "simhash_pairs": _df_entry(
+            lambda: dedup.simhash_near_duplicates(docs())),
+        "neardup_lsh": _df_entry(
             lambda: similarity.embedding_near_duplicates(
                 load_table(spark, sf_dir, "embeddings"),
-                threshold=0.9, use_lsh=True))
+                threshold=0.9, use_lsh=True)),
+        "containment": _df_entry(containment),
+        # the registry query pins a 150-doc oracle slice; the scale
+        # path runs the whole corpus with the stop-gram posting cap
+        "winnow_overlap": _df_entry(
+            lambda: dedup.winnow_overlap_pairs(
+                docs(), min_shared=8, max_postings=100)),
+    }
+    for alias, name in BENCH.items():
+        suite[alias] = _df_entry(
+            functools.partial(REGISTRY[name][0], spark, sf_dir))
+    return suite
 
-        def _containment_df():
-            # the SCALE path: LSH candidates verified with
-            # array_intersect over the full table — never the
-            # labeled quadratic oracle slice the registry query uses
-            d = load_table(spark, sf_dir, "documents")
-            cands = dedup.minhash_candidates(d)
-            return dedup.containment_pairs(
-                d, threshold=0.5, candidates=cands)
 
-        bench_containment = df_thunk(_containment_df)
-        # full-table winnowing overlap (the registry query pins a
-        # 150-doc oracle slice; the scale path runs the whole
-        # corpus with the stop-gram posting cap engaged)
-        bench_winnow = df_thunk(lambda: dedup.winnow_overlap_pairs(
-            load_table(spark, sf_dir, "documents"),
-            min_shared=8, max_postings=100))
+def time_entry(fn):
+    """Run one suite entry: ``(seconds, rows, error)``. ``rows`` is
+    the entry's int result (the ``.count()`` / profile row count) —
+    for pair-emitting queries the emitted-pair count, so a cross-tier
+    time-per-pair fit can separate output growth from a super-linear
+    plan. One bad query must not zero the suite, so a failure comes
+    back as ``(None, None, message)``."""
+    t0 = time.time()
+    try:
+        res = fn()
+    except Exception as exc:
+        return None, None, f"{type(exc).__name__}: {exc}"[:500]
+    return (round(time.time() - t0, 3),
+            res if isinstance(res, int) else None, None)
 
-        def run_df(fn):
-            def thunk():
-                return fn(spark, sf_dir).count()
-            # expose the DataFrame builder so the warm-up pass can
-            # fingerprint the optimized plan without re-running the
-            # (possibly model-building) query a second time
-            thunk._df = lambda: fn(spark, sf_dir)
-            return thunk
 
-        return {
-            "profile_lineitem": bench_profile,
-            "profile_documents": bench_profile_docs,
-            "json_props": run_df(json_props_stats),
-            "q1": run_df(q1_pricing_summary),
-            "q3": run_df(q3_top_orders),
-            "q5": run_df(q5_nation_revenue),
-            "window_topk": run_df(top_orders_per_customer),
-            "asof_join": run_df(asof_purchase_click),
-            "sessionize": run_df(sessionize_events),
-            "windowed_stats": run_df(windowed_event_stats),
-            "rollup": run_df(rollup_nation_year),
-            "minhash_candidates": bench_minhash,
-            "simhash_pairs": bench_simhash,
-            "token_stats": run_df(token_stats_by_lang),
-            "cosine_topk": run_df(cosine_topk),
-            "neardup_lsh": bench_neardup_lsh,
-            "repetition": run_df(repetition_signals),
-            "passage_dedup": run_df(passage_dedup_summary),
-            "pq_adc_topk": run_df(pq_adc_topk),
-            "training_manifest": run_df(training_manifest),
-            "tfidf": run_df(tfidf_top_terms),
-            "decontaminate": run_df(contamination_check),
-            "unigram_nll": run_df(unigram_nll),
-            "semantic_dedup": run_df(semantic_dedup_summary),
-            # newest retrieval / dedup / pipeline paths
-            "int8_topk": run_df(int8_topk_search),
-            "hybrid_rrf": run_df(hybrid_rrf_topk),
-            "containment": bench_containment,
-            "mixed_resample": run_df(mixed_resample_counts),
-            "decoded_media": run_df(decoded_media_stats),
-            "bigram_nll": run_df(bigram_nll),
-            "decompress": run_df(decompressed_text_stats),
-            "nb_confusion": run_df(nb_lang_confusion),
-            "span_dedup": run_df(span_dedup_texts),
-            "curation_report": run_df(source_curation_report),
-            "winnow_overlap": bench_winnow,
-            "token_jsd": run_df(source_token_jsd),
-            "dsir_select": run_df(dsir_resample_topk),
-            "scrub_spans": run_df(scrub_eval_spans),
-            "fuzzy_decontam": run_df(fuzzy_contamination_pairs),
-            "ngram_profile": run_df(repetition_ngram_profile),
-            "image_dhash": run_df(image_dhash_values),
-            "audio_envhash": run_df(audio_envelope_hashes),
-            "diverse_sample": run_df(diverse_sample_by_cluster),
-            "curation_v2": run_df(source_curation_report_v2),
-            "c4_line_clean": run_df(c4_line_clean),
-            "gopher_dup": run_df(gopher_dup_fractions),
-            "gopher_quality": run_df(gopher_quality_flags),
-            "filter_report": run_df(corpus_filter_report),
-            "ccnet_buckets": run_df(ccnet_perplexity_buckets),
-            "kn_bigram_nll": run_df(kn_bigram_nll),
-            "host_report": run_df(host_curation_report),
-            "host_filter": run_df(host_policy_filter),
-            "image_dedup_keep": run_df(image_dedup_keep),
-            "audio_dedup_keep": run_df(audio_dedup_keep),
-            "bloom_decontam": run_df(bloom_contamination_flags),
-            "host_pagerank": run_df(host_pagerank),
-            "cms_hitters": run_df(cms_heavy_hitters),
-            # round-9 paths: the ladder's tiered span aggs, the
-            # capped-vocab EM trainer, the DFT screen through the
-            # real decoder, the composed two-signal host gate
-            "span_ladder": run_df(longest_dup_span_report),
-            "unigram_vocab": run_df(unigram_tokenizer_vocab),
-            "audio_spectral": run_df(audio_spectral_features),
-            "host_policy_v2": run_df(host_policy_v2),
-            "image_entropy": run_df(image_entropy_stats),
-            "unigram_encode": run_df(unigram_encode_fertility),
-            "quality_calib": run_df(quality_gopher_calibration),
-            "embed_health": run_df(embedding_health_report),
-            # late round-9 paths: the two-sided link signal, the
-            # recording-defect battery, the likelihood-argmax
-            # tokenizer step, the sample-table frame sampler
-            "host_hits": run_df(host_hits_scores),
-            "audio_clipping": run_df(audio_clipping_stats),
-            "wordpiece_step": run_df(wordpiece_merge_candidates),
-            "video_frames": run_df(video_frame_index),
-            "encoding_screen": run_df(encoding_quality_report),
-            "vocab_overlap": run_df(source_vocab_overlap),
-            "heaps_growth": run_df(heaps_vocab_growth),
-            # round-10 paths: the PDF landing zone, MJPEG frame
-            # dedup, the mel-cepstral audio rung
-            "pdf_extract": run_df(pdf_extracted_text),
-            "video_dedup": run_df(video_dup_groups),
-            "audio_mfcc": run_df(audio_mfcc_features),
-            # late round-10 paths: office/markdown ingest, the
-            # safety lexicon scan, DoReMi reweighting, the
-            # prefix-truncation recall read-out
-            "docx_extract": run_df(docx_extracted_text),
-            "markdown_extract": run_df(markdown_extracted_text),
-            "blocklist": run_df(blocklist_screen),
-            "doremi": run_df(doremi_domain_weights),
-            "matryoshka": run_df(matryoshka_recall_at_k),
-            "office_extract": run_df(office_extracted_text),
-            "fim_coords": run_df(fim_split_coords),
-            "bitext_margin": run_df(bitext_margin_pairs),
-            "jpeg_quality": run_df(jpeg_quality_screen),
-            # round-11 paths: the remaining office containers and
-            # the book-corpus EPUB walk (chapters cleaned JVM-side)
-            "epub_extract": run_df(epub_extracted_text),
-            "pptx_extract": run_df(pptx_extracted_text),
-            "xlsx_extract": run_df(xlsx_extracted_text),
-            # the trained logistic quality gate (12 full-batch steps
-            # + corpus-wide scoring, the DCLM-shape filter)
-            "quality_classifier": run_df(quality_classifier_scores),
-            # energy-gated VAD segmentation through the WAV decoder
-            "audio_vad": run_df(audio_vad_segments),
-            # the code-corpus line-geometry screen and the
-            # Luhn-validated card scan (both single codegen scans)
-            "code_quality": run_df(code_quality_flags),
-            "pii_cards": run_df(pii_card_scan),
-            # the arXiv LaTeX landing zone (pure regexp codegen)
-            "latex_extract": run_df(latex_extracted_text),
-            # late round-11 paths: lexical retrieval (integer-micro
-            # BM25), shot-boundary detection through the MJPEG
-            # decode, and crawl link extraction into the host graph
-            "bm25_topk": run_df(bm25_topk),
-            "video_scene_cuts": run_df(video_scene_cuts),
-            "html_links": run_df(html_link_extract),
-            # host-template line removal (the RefinedWeb/CCNet
-            # boilerplate stage), the robots.txt policy fold, and
-            # contrastive hard-negative mining
-            "host_boilerplate": run_df(host_boilerplate_clean),
-            "robots_policy": run_df(robots_policy_check),
-            "hard_negatives": run_df(hard_negative_topk),
-            "mojibake_repair": run_df(mojibake_repair),
-            # temperature sampling beside UniMax, and sample-rate
-            # conversion through the real WAV decode
-            "alpha_weights": run_df(alpha_lang_weights),
-            "audio_resample": run_df(audio_resample),
-            # Gale-Church bitext beads (per-pair integer DP in the
-            # Arrow batch)
-            "sentence_align": run_df(sentence_align_beads),
-            # the mod-97 HOF fold and the inbound anchor-text signal
-            "iban_scan": run_df(pii_iban_scan),
-            "anchor_text": run_df(anchor_text_profile),
-            # round-11 SFT/ingest additions: notebook cell explode
-            # (from_json, outputs pruned in the parser), subtitle
-            # cue parse, the SPDX license gate, max-margin DPO
-            # pairs, ChatML render+structure, and the 3-iteration
-            # Lloyd's k-means trainer behind the IVF seeds
-            "ipynb_cells": run_df(ipynb_extracted_cells),
-            "subtitle_cues": run_df(subtitle_extracted_cues),
-            "license_screen": run_df(code_license_screen),
-            "preference_pairs": run_df(preference_pairs),
-            "chat_render": run_df(chat_template_render),
-            "kmeans_profile": run_df(kmeans_cluster_profile),
-            # A-ES weighted sampling, padded-batch coordinates, the
-            # homoglyph skeleton screen, and HTML table explode
-            "weighted_sample": run_df(weighted_sample_by_source),
-            "length_buckets": run_df(length_bucket_batches),
-            "confusable": run_df(confusable_spoof_screen),
-            "html_tables": run_df(html_table_extract),
-        }
+def run_tier(suite, budget=None):
+    """One pass over ``suite``: ``(times, rows, skipped)``. Once
+    ``budget`` seconds have elapsed the remaining entries are
+    recorded as skipped (time None)."""
+    times, rows, skipped = {}, {}, []
+    t0 = time.time()
+    for name, fn in suite.items():
+        if budget is not None and time.time() - t0 > budget:
+            skipped.append(name)
+            times[name] = None
+            continue
+        times[name], n, _ = time_entry(fn)
+        if n is not None:
+            rows[name] = n
+    return times, rows, skipped
 
-    suite = make_suite(SF_DIR)
 
-    # warm the JVM once so timings measure the queries, not session
-    # startup: load the parquet vectorized reader, codegen/Janino,
-    # ObjectHashAggregate (sketches), window exec and higher-order
-    # function classes. Each query still compiles its own generated
-    # code — this only amortizes class loading, as a long-lived
-    # production session would.
+def loglog_slope(points):
+    """Least-squares slope of log(t) on log(x) over the ``(x, t)``
+    points where both are set: the scaling exponent (~1.0 linear,
+    ~2.0 quadratic). None with fewer than two distinct x."""
+    pts = [(math.log(x), math.log(t)) for x, t in points if x and t]
+    if len(pts) < 2:
+        return None
+    mx = sum(x for x, _ in pts) / len(pts)
+    my = sum(y for _, y in pts) / len(pts)
+    denom = sum((x - mx) ** 2 for x, _ in pts)
+    if not denom:
+        return None
+    return round(sum((x - mx) * (y - my) for x, y in pts) / denom, 2)
+
+
+def loadavg():
+    try:
+        return round(os.getloadavg()[0], 1)
+    except OSError:
+        return None
+
+
+def gate_on_load():
+    """Wait (bounded, ~2 min) for external load to drain before a
+    pass, then proceed and let the recorded loadavg show it."""
+    for _ in range(6):
+        load = loadavg()
+        if load is None or load <= MAX_LOADAVG:
+            return load
+        time.sleep(20)
+    return loadavg()
+
+
+def spin_ms():
+    """Single-threaded fixed-work probe (~10 ms on quiet hardware):
+    measures the CPU throughput actually available to this VM at this
+    instant. The 1-minute loadavg cannot see co-tenant CPU steal —
+    round 11 measured four runs of identical code with
+    indistinguishable per-query loadavg vectors (medians 5.4-5.65)
+    spreading 97.3-138.5 s total — but a fixed busy loop can: its
+    wall time scales directly with steal and frequency capping."""
+    t0 = time.perf_counter()
+    acc = 0
+    for i in range(300000):
+        acc += i
+    if acc < 0:  # never true; pins `acc` as observable work
+        print(acc)
+    return round((time.perf_counter() - t0) * 1000.0, 2)
+
+
+def plan_fingerprint(df):
+    """md5 of the OPTIMIZED plan with expression IDs, object
+    addresses and lambda-variable counters normalized out."""
+    s = df._jdf.queryExecution().optimizedPlan().toString()
+    s = re.sub(r"#\d+", "#", s)          # expression IDs
+    s = re.sub(r"@[0-9a-f]+", "@", s)    # object addresses
+    # lambda variables are named from a JVM-wide counter (x_57), so
+    # the raw name depends on how many lambdas the entries built
+    # before this one; renumber them by first appearance instead
+    seen = {}
+    s = re.sub(r"(?<=lambda )(\w+?)_\d+\b",
+               lambda m: seen.setdefault(
+                   m.group(0), f"{m.group(1)}_{len(seen)}"), s)
+    return hashlib.md5(s.encode()).hexdigest()[:16]
+
+
+# Per-query parallelism signal (round 12, VERDICT r11 item 2): at
+# sf0.1 nearly every query sits on the session floor, so wall-clock
+# ratios across core counts cannot distinguish "parallelises at
+# scale" from "floor-bound at this SF". The EXECUTED task counts can:
+# after each warm-up execution the max tasks-in-one-stage among the
+# stages that query just ran is read from the app status store (a
+# stage-id watermark scopes the read to this query's jobs regardless
+# of which driver thread submitted them). Warm-up only, outside every
+# timed region.
+def _stage_list(spark):
+    # AppStatusStore.stageList(statuses, details, withSummaries,
+    # unsortedQuantiles, taskStatus): empty statuses = all stages
+    jvm = spark._jvm
+    gw = spark.sparkContext._gateway
+    return spark.sparkContext._jsc.sc().statusStore().stageList(
+        jvm.java.util.ArrayList(), False, False,
+        gw.new_array(jvm.double, 0), jvm.java.util.ArrayList())
+
+
+def _max_stage_id(spark):
+    try:
+        sl = _stage_list(spark)
+        return max((sl.apply(i).stageId() for i in range(sl.size())),
+                   default=-1)
+    except Exception:
+        return None
+
+
+def _max_tasks_since(spark, watermark):
+    if watermark is None:
+        return None
+    try:
+        sl = _stage_list(spark)
+        return max((sl.apply(i).numTasks() for i in range(sl.size())
+                    if sl.apply(i).stageId() > watermark),
+                   default=None)
+    except Exception:
+        return None
+
+
+def sf_of(d):
+    m = re.search(r"sf([0-9.]+)", os.path.basename(d.rstrip("/")))
+    try:
+        return float(m.group(1)) if m else None
+    except ValueError:
+        return None
+
+
+def median(vals):
+    vals = sorted(v for v in vals if v is not None)
+    if not vals:
+        return None
+    mid = len(vals) // 2
+    if len(vals) % 2:
+        return vals[mid]
+    return round((vals[mid - 1] + vals[mid]) / 2, 3)
+
+
+def minimum(vals):
+    vals = [v for v in vals if v is not None]
+    return min(vals) if vals else None
+
+
+def _warm_jvm(spark):
+    """Amortize class loading once, as a long-lived production
+    session would: the parquet vectorized reader, codegen/Janino,
+    ObjectHashAggregate (sketches), window exec and higher-order
+    function classes. Each query still compiles its own code."""
+    from pyspark.sql import functions as F
     from pyspark.sql.window import Window
+
     warm = spark.read.parquet(f"{SF_DIR}/region.parquet")
     (warm.select("*", F.explode(F.split(F.lit("a b"), " ")).alias("t"))
      .groupBy("t")
@@ -347,174 +331,181 @@ def main():
          Window.partitionBy("t").orderBy("t")))
      .collect())
 
+
+def _doclen_ladder(spark):
+    """The sf ladder scales ROW COUNT, but the fixture documents are
+    short, so a gram builder that is quadratic IN DOCUMENT LENGTH is
+    invisible to every sf number (the round-5 blind spot: a 115x HOF
+    re-derivation survived five rounds of green benches). This times
+    the token-pipeline operators over synthetic corpora at FIXED row
+    count and 4x token lengths; linear operators read ~<=1.0 and a
+    quadratic gram shape trends toward 2.0."""
+    from pyspark.sql import functions as F
+
+    from structa_spark.operators import dedup, text
+    from structa_spark.operators import sampling as _sampling
+
+    def _docs(n_docs, n_tokens):
+        words = ["alpha", "beta", "gamma", "delta", "epsilon",
+                 "zeta", "eta", "theta", "iota", "kappa"]
+        rows = [(d, " ".join(
+            words[(d * 7 + i * 3) % len(words)] + str((d + i) % 97)
+            for i in range(n_tokens))) for d in range(n_docs)]
+        df = (spark.createDataFrame(rows, "doc_id int, text string")
+              .repartition(int(CPUS)))
+        df.persist().count()
+        return df
+
+    doclen_ops = {
+        "shingle_explode": lambda d: d.select(
+            F.explode(dedup.word_shingles(F.col("text"), 3))
+            .alias("s")).count(),
+        "span_dup": lambda d: dedup.span_dup_per_doc(d, n=5)
+            .agg(F.sum("n_spans")).collect(),
+        "dsir_features": lambda d: _sampling._hashed_ngram_counts(
+            d, 1024, "doc_id", "text").count(),
+        "bigram_nll": lambda d: text.bigram_logprob(
+            d, persist=False).agg(F.sum("n_bigrams")).collect(),
+        "fingerprint": lambda d: text.fingerprint(d, k=8)
+            .agg(F.sum("fingerprint")).collect(),
+        "winnow": lambda d: dedup.winnow_fingerprints(
+            d, k=8, w=16).count(),
+        "chunk_windows": lambda d: text.chunk_windows(
+            d, 32, 16).count(),
+        # line-rule batteries: the synthetic docs are one long
+        # line, which still scales the split/filter/reassemble
+        # path these share — a super-linear regexp or HOF shape
+        # shows up exactly like the gram builders above
+        "c4_lines": lambda d: text.c4_clean_lines(d)
+            .agg(F.sum("n_kept_lines")).collect(),
+        "gopher_quality": lambda d: text.gopher_quality_flags(d)
+            .agg(F.sum("n_words")).collect(),
+    }
+    # N_RUNS alternated passes per size, per-op MIN: load spikes
+    # inflate single passes 10-20x (a measured winnow pass went 50s ->
+    # 5.6s within one session as external load drained), which fakes
+    # a quadratic exponent. Contention only ever adds time, and
+    # alternating sizes keeps a monotone load drift from biasing one
+    # size.
+    frames = {n: _docs(200, n) for n in (2000, 8000)}
+    passes = {n: {name: [] for name in doclen_ops} for n in frames}
+
+    def run(name, n_tok):
+        passes[n_tok][name].append(time_entry(
+            functools.partial(doclen_ops[name], frames[n_tok]))[0])
+
+    def mins_and_exps():
+        mins = {n: {name: minimum(vals) for name, vals in per.items()}
+                for n, per in passes.items()}
+        exps = {}
+        for name in doclen_ops:
+            e = loglog_slope((n, mins[n].get(name)) for n in frames)
+            if e is not None:
+                exps[name] = e
+        return mins, exps
+
+    loads = []
+    for _ in range(N_RUNS):
+        # when an exponent reads super-linear, this shows whether
+        # external contention (not the operator) owned the run
+        loads.append(loadavg())
+        for n_tok in frames:
+            for name in doclen_ops:
+                run(name, n_tok)
+    mins, exps = mins_and_exps()
+    # targeted re-measure: a contention spike during one op's
+    # 8000-token passes fakes a super-linear exponent (round 6
+    # recorded fingerprint at 1.14 under loadavg 24; a quiet-box
+    # min-of-7 read 0.95). Any op reading > 1.0 gets a FIXED number of
+    # extra passes — never stopping early when the exponent first dips
+    # under 1.0, which would asymmetrically nudge marginal readings
+    # downward. A REAL quadratic keeps failing however many minimums
+    # are taken; pre/post-retry exponents ship so it is auditable.
+    flagged = sorted(n for n, e in exps.items() if e > 1.0)
+    pre_retry = {n: exps[n] for n in flagged}
+    for name in flagged:
+        for _ in range(DOCLEN_RETRIES):
+            for n_tok in frames:
+                run(name, n_tok)
+    if flagged:
+        mins, exps = mins_and_exps()
+    for df in frames.values():
+        df.unpersist()
+    return {
+        "n_docs": 200,
+        "n_tokens": [2000, 8000],
+        "aggregation": f"per-op min of {N_RUNS} alternated passes",
+        "queries": {str(k): v for k, v in mins.items()},
+        "passes": {str(k): v for k, v in passes.items()},
+        "loadavg_per_pass": loads,
+        "exponents": exps,
+        "retry": {
+            "flagged": flagged,
+            "extra_passes_each": DOCLEN_RETRIES,
+            "pre_retry_exponents": pre_retry,
+            "post_retry_exponents": {n: exps.get(n) for n in flagged},
+        },
+    }
+
+
+def _write_json(path, obj):
+    try:
+        with open(path, "w") as fh:
+            json.dump(obj, fh, indent=1)
+    except OSError:
+        pass  # a read-only checkout must not fail the bench
+
+
+def main():
+    spark = session()
+    suite = make_suite(spark, SF_DIR)
+    _warm_jvm(spark)
+
     # DISCARDED warm-up pass over the whole suite: the first-ever
     # execution of each query pays one-time codegen + class loading
     # + shared-cache materialization, and a cold first pass has read
     # 3-4x the steady-state total (288.7 s vs 83.5/68.3 s in the
-    # round-8 driver artifact), dragging every median of 3 one-third
-    # cold. The warm-up's timings are thrown away; it doubles as the
-    # plan-fingerprint pass — each query's OPTIMIZED plan (expression
-    # IDs normalized out) is hashed into the artifact so a future
-    # timing drift on "unchanged code" is instantly attributable:
+    # round-8 artifact). It doubles as the fingerprint pass:
     # fingerprint changed => the plan changed; unchanged => box noise.
-    import hashlib
-    import re as _re
-
-    def _plan_fingerprint(df):
-        s = df._jdf.queryExecution().optimizedPlan().toString()
-        s = _re.sub(r"#\d+", "#", s)          # expression IDs
-        s = _re.sub(r"@[0-9a-f]+", "@", s)    # object addresses
-        return hashlib.md5(s.encode()).hexdigest()[:16]
-
-    # Per-query parallelism signal (round 12, VERDICT r11 item 2):
-    # at sf0.1 nearly every query sits on the session floor, so the
-    # driver's 32-vs-8-core wall-clock ratios cannot distinguish
-    # "parallelises at scale" from "floor-bound at this SF". The
-    # EXECUTED task counts can: after each warm-up execution the max
-    # tasks-in-one-stage among the stages that query just ran is read
-    # from the app status store (a stage-id watermark scopes the
-    # read to this query's jobs regardless of which driver thread
-    # submitted them). Measured OUTSIDE every timed region — warm-up
-    # only — and shipped as the additive `max_tasks_per_stage` key.
-    def _stage_list():
-        # AppStatusStore.stageList(statuses, details, withSummaries,
-        # unsortedQuantiles, taskStatus): empty statuses = all stages
-        jvm = spark._jvm
-        gw = spark.sparkContext._gateway
-        return (spark.sparkContext._jsc.sc().statusStore().stageList(
-            jvm.java.util.ArrayList(), False, False,
-            gw.new_array(jvm.double, 0), jvm.java.util.ArrayList()))
-
-    def _max_stage_id():
-        try:
-            sl = _stage_list()
-            return max((sl.apply(i).stageId()
-                        for i in range(sl.size())), default=-1)
-        except Exception:
-            return None
-
-    def _max_tasks_since(watermark):
-        if watermark is None:
-            return None
-        try:
-            sl = _stage_list()
-            return max((sl.apply(i).numTasks()
-                        for i in range(sl.size())
-                        if sl.apply(i).stageId() > watermark),
-                       default=None)
-        except Exception:
-            return None
-
     fingerprints = {}
     task_counts = {}
     if os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1") != "0":
-        for name in suite:
-            fn = suite[name]
-            wm = _max_stage_id()
+        for name, fn in suite.items():
+            wm = _max_stage_id(spark)
             try:
                 if hasattr(fn, "_df"):
                     df = fn._df()
-                    fingerprints[name] = _plan_fingerprint(df)
+                    fingerprints[name] = plan_fingerprint(df)
                     df.count()
-                elif hasattr(fn, "_fp"):
-                    # result fingerprint (profile entries): the call
-                    # doubles as the warm-up execution
-                    fingerprints[name] = fn._fp()
                 else:
-                    fn()
+                    # the profile call doubles as the warm-up execution
+                    fingerprints[name] = fn._fp()
             except Exception:
                 pass  # the timed passes report the error properly
-            mt = _max_tasks_since(wm)
+            mt = _max_tasks_since(spark, wm)
             if mt is not None:
                 task_counts[name] = mt
-        # EVERY suite entry must carry a fingerprint, so the next
-        # timing drift on "unchanged code" is instantly attributable
-        # for any query (fingerprint changed => plan/result changed;
-        # unchanged => box noise). Entries missing one are a wiring
-        # bug in the suite, not a benign gap.
+        # a missing fingerprint is a wiring bug in the suite
         missing_fp = sorted(set(suite) - set(fingerprints))
         if missing_fp:
             print(f"WARNING: no fingerprint for {missing_fp}",
                   file=sys.stderr)
 
-    # MIN of 3 passes per query: this box shares hardware and
-    # intermittent EXTERNAL load spikes land even when the box looks
-    # idle — round 10's committed artifact recorded fuzzy_decontam at
-    # 28.67 s in one pass (vs 1.89/2.58 in the others) and let an
-    # asof_join spike through the median as a fake 2.2x "regression".
-    # Contention only ever ADDS time, so the minimum is the
-    # noise-robust estimator for algorithmic cost (the doclen ladder
-    # below has used it since round 6, and the standalone quiet-box
-    # remeasure protocol since round 8); the per-query median still
-    # ships in the artifact (out["medians"]) for continuity with
-    # rounds <= 10, and all raw passes ship for transparency.
-    #
-    # Each pass is additionally GATED on the 1-minute loadavg: a pass
-    # does not start while external load exceeds
-    # $SPARK_GRAFT_MAX_LOADAVG (default 10 — driver reruns above that
-    # are methodology noise by the established adjudication protocol);
-    # the gate waits up to ~2 min, then proceeds and records the
-    # violation. The loadavg sampled before every query of every pass
-    # ships in the artifact so any future drift is adjudicable
-    # without a separate remeasure run.
+    # MIN of N_RUNS passes per query: contention only ever ADDS time
+    # (round 10 recorded fuzzy_decontam at 28.67 s in one pass vs
+    # 1.89/2.58 in the others), so the minimum is the noise-robust
+    # estimator for algorithmic cost; medians and all raw passes ship
+    # alongside. Each pass is gated on the loadavg, and the loadavg
+    # and spin probe sampled before every query ship in the artifact.
     #
     # Pass ORDER alternates (forward / reversed / half-rotated): in a
-    # single long-lived driver session, later queries inherit JVM/GC
-    # pressure from earlier ones, so a growing suite read as a
-    # round-over-round "regression" of whichever queries happened to
-    # sit late in the fixed order (round 7 measured unchanged code
-    # drifting 1.0-1.5x non-uniformly). Alternation spreads the
-    # position effect across passes so the per-query minimum compares
-    # across rounds even as the suite grows.
-    N_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    MAX_LOAD = float(os.environ.get("SPARK_GRAFT_MAX_LOADAVG", "10"))
-
-    def _loadavg():
-        try:
-            return round(os.getloadavg()[0], 1)
-        except OSError:
-            return None
-
-    def _gate_on_load():
-        """Wait (bounded) for external load to drain before a pass."""
-        for _ in range(6):
-            load = _loadavg()
-            if load is None or load <= MAX_LOAD:
-                return load
-            time.sleep(20)
-        return _loadavg()
-
-    def _spin_ms():
-        """Single-threaded fixed-work probe (~10 ms on quiet
-        hardware): measures the CPU throughput actually available to
-        this VM at this instant. The 1-minute loadavg cannot see
-        co-tenant CPU steal — round 11 measured four runs of
-        identical code with indistinguishable per-query loadavg
-        vectors (medians 5.4-5.65) spreading 97.3-138.5 s total — but
-        a fixed busy loop can: its wall time scales directly with
-        steal and frequency capping. One reading per query per pass
-        ships in the artifact (outside every timed region) so a
-        judge can normalize a cross-round delta against hardware
-        conditions without a separate remeasure run."""
-        t0 = time.perf_counter()
-        acc = 0
-        for i in range(300000):
-            acc += i
-        if acc < 0:  # never true; pins `acc` as observable work
-            print(acc)
-        return round((time.perf_counter() - t0) * 1000.0, 2)
-
+    # single long-lived session, later queries inherit JVM/GC pressure
+    # from earlier ones (round 7 measured unchanged code drifting
+    # 1.0-1.5x non-uniformly), so alternation spreads the position
+    # effect across passes.
     names = list(suite)
-    all_runs = []
-    all_loads = []
-    all_spins = []
+    all_runs, all_loads, all_spins = [], [], []
     errors = {}
-    # rows returned by each query's timed action (the .count() value
-    # / profile row count) — additive artifact key (round 12): for
-    # pair-emitting queries (simhash_pairs, minhash_candidates, ...)
-    # this is the emitted-pair count, so a cross-tier time-per-pair
-    # fit can separate workload-quadratic output growth from a
-    # super-linear plan (VERDICT r11 item 6)
     emitted = {}
     for r in range(N_RUNS):
         if r % 3 == 1:
@@ -524,39 +515,19 @@ def main():
             order = names[mid:] + names[:mid]
         else:
             order = names
-        _gate_on_load()
-        run = {}
-        run_load = {}
-        run_spin = {}
+        gate_on_load()
+        run, run_load, run_spin = {}, {}, {}
         for name in order:
-            fn = suite[name]
-            run_load[name] = _loadavg()
-            run_spin[name] = _spin_ms()
-            t0 = time.time()
-            try:
-                res = fn()
-                run[name] = round(time.time() - t0, 3)
-                if name not in emitted and isinstance(res, int):
-                    emitted[name] = res
-            except Exception as exc:  # one bad query must not zero it
-                errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-                run[name] = None
+            run_load[name] = loadavg()
+            run_spin[name] = spin_ms()
+            run[name], rows, err = time_entry(suite[name])
+            if err is not None:
+                errors[name] = err
+            elif name not in emitted and rows is not None:
+                emitted[name] = rows
         all_runs.append(run)
         all_loads.append(run_load)
         all_spins.append(run_spin)
-
-    def median(vals):
-        vals = sorted(v for v in vals if v is not None)
-        if not vals:
-            return None
-        mid = len(vals) // 2
-        if len(vals) % 2:
-            return vals[mid]
-        return round((vals[mid - 1] + vals[mid]) / 2, 3)
-
-    def minimum(vals):
-        vals = [v for v in vals if v is not None]
-        return min(vals) if vals else None
 
     times = {name: minimum([run[name] for run in all_runs])
              for name in suite}
@@ -589,7 +560,7 @@ def main():
         "spin_ms_per_query": all_spins,
         "rows_emitted": emitted,
         "max_tasks_per_stage": task_counts,
-        "max_loadavg_gate": MAX_LOAD,
+        "max_loadavg_gate": MAX_LOADAVG,
         "runs": [round(sum(t for t in run.values() if t is not None), 3)
                  for run in all_runs],
         "sf": SF_DIR,
@@ -601,113 +572,47 @@ def main():
         out["errors"] = errors
 
     # scale ladder: one extra pass at a smaller scale factor and the
-    # per-query scaling exponent log(t_big/t_small)/log(sf_ratio).
-    # A linear operator reads ~1.0 minus fixed-overhead compression
-    # (job-launch floor dominates small-SF timings, biasing exponents
-    # LOW); anything trending clearly above ~1.3 is the 100x alarm —
-    # super-linearity caught by trend, not eyeball.
-    import math
-    import re
-
-    def _sf_of(d):
-        m = re.search(r"sf([0-9.]+)", os.path.basename(d.rstrip("/")))
-        try:
-            return float(m.group(1)) if m else None
-        except ValueError:
-            return None
-
-    ladder_dir = os.environ.get("SPARK_GRAFT_LADDER_DIR",
-                                "/root/testdata/sf0.01")
-    sf_main, sf_small = _sf_of(SF_DIR), _sf_of(ladder_dir)
-    if (os.environ.get("SPARK_GRAFT_BENCH_LADDER", "1") != "0"
-            and os.path.isdir(ladder_dir)
+    # per-query scaling exponent. A linear operator reads ~1.0 minus
+    # fixed-overhead compression (the job-launch floor dominates
+    # small-SF timings, biasing exponents LOW); anything trending
+    # clearly above ~1.3 is the 100x alarm.
+    sf_main, sf_small = sf_of(SF_DIR), sf_of(LADDER_DIR)
+    small = {}
+    if (os.path.isdir(LADDER_DIR)
             and sf_main and sf_small and sf_main > sf_small):
-        small_suite = make_suite(ladder_dir)
-        small = {}
-        small_emitted = {}
-        for name, fn in small_suite.items():
-            t0 = time.time()
-            try:
-                res = fn()
-                small[name] = round(time.time() - t0, 3)
-                if isinstance(res, int):
-                    small_emitted[name] = res
-            except Exception:
-                small[name] = None
-        ratio = sf_main / sf_small
-        exponents = {
-            name: round(math.log(times[name] / small[name])
-                        / math.log(ratio), 2)
-            for name in suite
-            if times.get(name) and small.get(name)}
+        small, small_emitted, _ = run_tier(make_suite(spark, LADDER_DIR))
+        exponents = {}
+        for name in suite:
+            e = loglog_slope([(sf_small, small.get(name)),
+                              (sf_main, times.get(name))])
+            if e is not None:
+                exponents[name] = e
         out["ladder"] = {
-            "sf_dir": ladder_dir,
-            "scale_ratio": ratio,
+            "sf_dir": LADDER_DIR,
+            "scale_ratio": sf_main / sf_small,
             "queries": small,
             "rows_emitted": small_emitted,
             "exponents": exponents,
         }
 
-    # upper ladder tier: the OPTIONAL local sf1 fixture
-    # (scripts/gen_sf1.py, 10x sf0.1, gitignored) adds a third
-    # row-count point above the main SF, turning the two-point
-    # exponent into a least-squares fit and exercising AQE at real
-    # partition counts. Skipped silently when the fixture is absent
-    # (fresh clones) — the two-point ladder above still reports.
-    up_dir = os.environ.get(
-        "SPARK_GRAFT_LADDER_UP_DIR",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "spark-warehouse", "sf1"))
-    sf_up = _sf_of(up_dir)
+    # upper ladder tier: a third row-count point above the main SF
+    # turns the two-point exponent into a least-squares fit and
+    # exercises AQE at real partition counts
+    sf_up = sf_of(LADDER_UP_DIR)
     if (os.environ.get("SPARK_GRAFT_BENCH_LADDER_UP", "1") != "0"
-            and os.path.isdir(up_dir)
+            and os.path.isdir(LADDER_UP_DIR)
             and sf_main and sf_up and sf_up > sf_main):
-        up_suite = make_suite(up_dir)
-        up = {}
-        up_emitted = {}
-        # wall-clock budget for the whole tier (measured ~200s for
-        # the full suite at sf1): once exceeded, the remaining
-        # queries record as skipped rather than risking the driver's
-        # bench window — partial 3-point evidence beats a lost round
-        up_budget = float(os.environ.get(
-            "SPARK_GRAFT_LADDER_UP_BUDGET", "300"))
-        tier_t0 = time.time()
-        skipped = []
-        for name, fn in up_suite.items():
-            if time.time() - tier_t0 > up_budget:
-                skipped.append(name)
-                up[name] = None
-                continue
-            t0 = time.time()
-            try:
-                res = fn()
-                up[name] = round(time.time() - t0, 3)
-                if isinstance(res, int):
-                    up_emitted[name] = res
-            except Exception:
-                up[name] = None
-        # per-query least-squares slope of log(t) on log(sf) over
-        # every tier that produced a time (2 or 3 points)
-        small_times = out.get("ladder", {}).get("queries", {})
+        up, up_emitted, skipped = run_tier(
+            make_suite(spark, LADDER_UP_DIR), budget=LADDER_UP_BUDGET)
         exps3 = {}
         for name in suite:
-            xs, ys = [], []
-            for sf_val, t in ((sf_small, small_times.get(name)),
+            e = loglog_slope([(sf_small, small.get(name)),
                               (sf_main, times.get(name)),
-                              (sf_up, up.get(name))):
-                if sf_val and t:
-                    xs.append(math.log(sf_val))
-                    ys.append(math.log(t))
-            if len(xs) >= 2:
-                mx = sum(xs) / len(xs)
-                my = sum(ys) / len(ys)
-                denom = sum((x - mx) ** 2 for x in xs)
-                if denom:
-                    exps3[name] = round(
-                        sum((x - mx) * (y - my)
-                            for x, y in zip(xs, ys)) / denom, 2)
+                              (sf_up, up.get(name))])
+            if e is not None:
+                exps3[name] = e
         out["ladder_up"] = {
-            "sf_dir": up_dir,
+            "sf_dir": LADDER_UP_DIR,
             "sf": sf_up,
             "queries": up,
             "rows_emitted": up_emitted,
@@ -716,190 +621,34 @@ def main():
         if skipped:
             out["ladder_up"]["skipped_on_budget"] = skipped
 
-    # doc-length ladder: the sf ladder above scales ROW COUNT, but the
-    # fixture documents are short, so a gram builder that is quadratic
-    # IN DOCUMENT LENGTH is invisible to every sf number (the round-5
-    # blind spot: a 115x HOF re-derivation survived five rounds of
-    # green benches). This block times the token-pipeline operators
-    # over synthetic corpora at FIXED row count and 4x token lengths;
-    # the exponent is log(t_big/t_small)/log(4). Linear operators read
-    # ~<=1.0; anything trending toward 2.0 is a quadratic gram shape.
     if os.environ.get("SPARK_GRAFT_BENCH_DOCLEN", "1") != "0":
-        from structa_spark.operators import sampling as _sampling
+        out["doclen_ladder"] = _doclen_ladder(spark)
 
-        def _docs(n_docs, n_tokens):
-            words = ["alpha", "beta", "gamma", "delta", "epsilon",
-                     "zeta", "eta", "theta", "iota", "kappa"]
-            rows = [(d, " ".join(
-                words[(d * 7 + i * 3) % len(words)] + str((d + i) % 97)
-                for i in range(n_tokens))) for d in range(n_docs)]
-            df = (spark.createDataFrame(rows, "doc_id int, text string")
-                  .repartition(int(CPUS)))
-            df.persist().count()
-            return df
-
-        doclen_ops = {
-            "shingle_explode": lambda d: d.select(
-                F.explode(dedup.word_shingles(F.col("text"), 3))
-                .alias("s")).count(),
-            "span_dup": lambda d: dedup.span_dup_per_doc(d, n=5)
-                .agg(F.sum("n_spans")).collect(),
-            "dsir_features": lambda d: _sampling._hashed_ngram_counts(
-                d, 1024, "doc_id", "text").count(),
-            "bigram_nll": lambda d: text.bigram_logprob(
-                d, persist=False).agg(F.sum("n_bigrams")).collect(),
-            "fingerprint": lambda d: text.fingerprint(d, k=8)
-                .agg(F.sum("fingerprint")).collect(),
-            "winnow": lambda d: dedup.winnow_fingerprints(
-                d, k=8, w=16).count(),
-            "chunk_windows": lambda d: text.chunk_windows(
-                d, 32, 16).count(),
-            # line-rule batteries: the synthetic docs are one long
-            # line, which still scales the split/filter/reassemble
-            # path these share — a super-linear regexp or HOF shape
-            # shows up exactly like the gram builders above
-            "c4_lines": lambda d: text.c4_clean_lines(d)
-                .agg(F.sum("n_kept_lines")).collect(),
-            "gopher_quality": lambda d: text.gopher_quality_flags(d)
-                .agg(F.sum("n_words")).collect(),
-        }
-        # N_RUNS alternated passes per size, per-op MIN: this box shares
-        # hardware and load spikes inflate single passes 10-20x (a
-        # measured winnow pass went 50s -> 5.6s within one session as
-        # external load drained), which fakes a quadratic exponent.
-        # The minimum is the noise-robust estimator for ALGORITHMIC
-        # cost — contention only ever adds time — and alternating
-        # sizes keeps a monotone load drift from biasing one size.
-        frames = {n: _docs(200, n) for n in (2000, 8000)}
-        doclen_passes = {n: {name: [] for name in doclen_ops}
-                         for n in frames}
-        doclen_load = []
-        for _ in range(N_RUNS):
-            # 1-minute load average per pass: when an exponent reads
-            # super-linear, this shows whether external contention
-            # (not the operator) owned the run
-            try:
-                doclen_load.append(round(os.getloadavg()[0], 1))
-            except OSError:
-                doclen_load.append(None)
-            for n_tok, df in frames.items():
-                for name, op in doclen_ops.items():
-                    t0 = time.time()
-                    try:
-                        op(df)
-                        doclen_passes[n_tok][name].append(
-                            round(time.time() - t0, 3))
-                    except Exception:
-                        doclen_passes[n_tok][name].append(None)
-        def _doclen_mins():
-            return {
-                n: {name: (min(v for v in vals if v is not None)
-                           if any(v is not None for v in vals)
-                           else None)
-                    for name, vals in per.items()}
-                for n, per in doclen_passes.items()}
-
-        def _doclen_exps(mins):
-            return {
-                name: round(math.log(mins[8000][name]
-                                     / mins[2000][name])
-                            / math.log(4), 2)
-                for name in doclen_ops
-                if mins[2000].get(name) and mins[8000].get(name)}
-
-        doclen = _doclen_mins()
-        doclen_exp = _doclen_exps(doclen)
-        # targeted re-measure: a contention spike during one op's
-        # 8000-token passes fakes a super-linear exponent (round 6
-        # recorded fingerprint at 1.14 under loadavg 24; a quiet-box
-        # min-of-7 read 0.95). Any op reading > 1.0 gets a FIXED
-        # number of extra alternated passes — never stopping early
-        # when the exponent first dips under 1.0, which would be a
-        # stop-when-pass protocol that asymmetrically nudges marginal
-        # readings downward (min-of-N can only decrease with more
-        # passes). A REAL quadratic (~2.0) keeps failing no matter
-        # how many minimums are taken; pre/post-retry exponents ship
-        # in the artifact so the adjustment is auditable.
-        retries = int(os.environ.get("SPARK_GRAFT_DOCLEN_RETRIES",
-                                     "4"))
-        flagged = sorted(n for n, e in doclen_exp.items() if e > 1.0)
-        pre_retry = {n: doclen_exp[n] for n in flagged}
-        for name in flagged:
-            for _ in range(retries):
-                for n_tok, df in frames.items():
-                    t0 = time.time()
-                    try:
-                        doclen_ops[name](df)
-                        doclen_passes[n_tok][name].append(
-                            round(time.time() - t0, 3))
-                    except Exception:
-                        doclen_passes[n_tok][name].append(None)
-        if flagged:
-            doclen = _doclen_mins()
-            doclen_exp = _doclen_exps(doclen)
-        for df in frames.values():
-            df.unpersist()
-        out["doclen_ladder"] = {
-            "n_docs": 200,
-            "n_tokens": [2000, 8000],
-            "aggregation": f"per-op min of {N_RUNS} alternated passes",
-            "queries": {str(k): v for k, v in doclen.items()},
-            "passes": {str(k): v for k, v in doclen_passes.items()},
-            "loadavg_per_pass": doclen_load,
-            "exponents": doclen_exp,
-            "retry": {
-                "flagged": flagged,
-                "extra_passes_each": retries,
-                "pre_retry_exponents": pre_retry,
-                "post_retry_exponents": {
-                    n: doclen_exp.get(n) for n in flagged},
-            },
-        }
-
-    # the COMPLETE result also lands on disk: the round-6 driver
-    # artifact captured only the last 2000 chars of stdout and lost
-    # the per-query medians block ("parsed": null) — the file copy
-    # makes stdout truncation unable to lose anything again
-    full_path = os.environ.get("SPARK_GRAFT_FULL_PATH",
-                               os.path.join(os.path.dirname(
-                                   os.path.abspath(__file__)),
-                                   "BENCH_local.json"))
-    try:
-        with open(full_path, "w") as fh:
-            json.dump(out, fh, indent=1)
-    except OSError:
-        pass  # a read-only checkout must not fail the bench
-
-    # medians + exponents also land in their own small file so the
-    # judge/driver never depends on capturing this process's stdout
-    # tail (a truncated capture once cost a round its medians block)
-    medians_path = os.environ.get("SPARK_GRAFT_MEDIANS_PATH",
-                                  os.path.join(os.path.dirname(
-                                      os.path.abspath(__file__)),
-                                      "BENCH_medians.json"))
-    try:
-        with open(medians_path, "w") as fh:
-            json.dump({
-                "metric": out["metric"],
-                "value": out["value"],
-                "unit": out["unit"],
-                "aggregation": out["aggregation"],
-                "sf": out["sf"],
-                "queries": times,
-                "medians": medians,
-                "loadavg_per_query": all_loads,
-                "spin_ms_per_query": all_spins,
-                "rows_emitted": emitted,
-                "max_tasks_per_stage": task_counts,
-                "exponents": out.get("ladder", {}).get("exponents"),
-                "exponents_3pt": out.get("ladder_up",
-                                         {}).get("exponents_3pt"),
-                "doclen_exponents": out.get("doclen_ladder",
-                                            {}).get("exponents"),
-                "plan_fingerprints": fingerprints,
-            }, fh, indent=1)
-    except OSError:
-        pass  # a read-only checkout must not fail the bench
+    # the COMPLETE result also lands on disk (a truncated stdout
+    # capture once lost a round's medians block), and medians +
+    # exponents land in their own small file
+    _write_json(os.environ.get("SPARK_GRAFT_FULL_PATH",
+                               os.path.join(REPO, "BENCH_local.json")),
+                out)
+    _write_json(os.environ.get("SPARK_GRAFT_MEDIANS_PATH",
+                               os.path.join(REPO, "BENCH_medians.json")), {
+        "metric": out["metric"],
+        "value": out["value"],
+        "unit": out["unit"],
+        "aggregation": out["aggregation"],
+        "sf": out["sf"],
+        "queries": times,
+        "medians": medians,
+        "loadavg_per_query": all_loads,
+        "spin_ms_per_query": all_spins,
+        "rows_emitted": emitted,
+        "max_tasks_per_stage": task_counts,
+        "exponents": out.get("ladder", {}).get("exponents"),
+        "exponents_3pt": out.get("ladder_up", {}).get("exponents_3pt"),
+        "doclen_exponents": out.get("doclen_ladder",
+                                    {}).get("exponents"),
+        "plan_fingerprints": fingerprints,
+    })
 
     print(json.dumps(out))
     spark.stop()

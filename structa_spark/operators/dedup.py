@@ -955,8 +955,7 @@ def drop_duplicated_spans(df: DataFrame, n: int = 5,
 
 def scrub_contaminated_spans(corpus: DataFrame, eval_df: DataFrame,
                              n: int = 5, id_col: str = "doc_id",
-                             text_col: str = "text",
-                             persist: bool = True) -> DataFrame:
+                             text_col: str = "text") -> DataFrame:
     """SURGICAL test-set decontamination: remove from each corpus
     document every word ``n``-gram span that also occurs anywhere in
     the held-out evaluation set, and keep the rest of the document —
@@ -982,23 +981,19 @@ def scrub_contaminated_spans(corpus: DataFrame, eval_df: DataFrame,
     projection (one-deep module cache, same lifecycle as
     dsir_logweights' feature counts) — without it, column pruning
     recompiles each branch into its own full corpus scan and the
-    text column is read and split three times. ``persist=False``
-    opts out (the branches then recompute — only sensible when the
-    caller persists upstream). Grams lowercase the bound token
-    array, which is byte-identical to tokenizing lowercased text
-    (lowercasing never creates or removes whitespace), so
-    tokenization cannot drift from the span-dedup family's shared
-    :func:`_span_grams`.
+    text column is read and split three times. Grams lowercase the
+    bound token array, which is byte-identical to tokenizing
+    lowercased text (lowercasing never creates or removes
+    whitespace), so tokenization cannot drift from the span-dedup
+    family's shared :func:`_span_grams`.
     """
     from ._cache import evict_then_cache as _evict_then_cache
     from .text import tokens as _tokens
     from .text import word_ngrams as _word_ngrams
 
     txt = F.coalesce(F.col(text_col), F.lit(""))
-    base = corpus.select(
-        F.col(id_col), _tokens(F.trim(txt)).alias("__toks"))
-    if persist:
-        base = _evict_then_cache(_SCRUB_TOKS_CACHE, base)
+    base = _evict_then_cache(_SCRUB_TOKS_CACHE, corpus.select(
+        F.col(id_col), _tokens(F.trim(txt)).alias("__toks")))
     toks = base.select(
         F.col(id_col), F.posexplode("__toks").alias("pos", "tok"))
     ev = _span_grams(eval_df, n, None, text_col).select("g").distinct()

@@ -22,8 +22,7 @@ from pyspark.sql import functions as F
 
 def pagerank(edges: DataFrame, damping: float = 0.85,
              iters: int = 3, src: str = "src", dst: str = "dst",
-             round_to: int = 9,
-             checkpoint_every: int = 0) -> DataFrame:
+             round_to: int = 9) -> DataFrame:
     """PageRank over a directed edge relation, ``iters`` fixed
     power-iterations with uniform init, dangling-mass redistribution
     and per-iteration rounding:
@@ -51,9 +50,7 @@ def pagerank(edges: DataFrame, damping: float = 0.85,
     bounded by the node/edge relation, never the corpus that derived
     it. The round's aggregated output (its only twice-read relation)
     localCheckpoints lazily, keeping plan size and executed work
-    linear in ``iters``; ``checkpoint_every`` remains for callers
-    that want an EAGER cut every k rounds on very deep iteration
-    counts (the :func:`~.dedup.connected_components` discipline).
+    linear in ``iters``.
     """
     e = (edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
          .where(F.col(src) != F.col(dst))
@@ -101,7 +98,7 @@ def pagerank(edges: DataFrame, damping: float = 0.85,
 
     r = (nodes.join(F.broadcast(n_rel))
          .select("v", (F.lit(1.0) / F.col("__n")).alias("rank")))
-    for i in range(iters):
+    for _ in range(iters):
         # the previous rank vector is read ONCE per iteration (this
         # join); the aggregated round output is what two consumers
         # read (dangling row + new ranks), so IT carries the lazy
@@ -123,14 +120,11 @@ def pagerank(edges: DataFrame, damping: float = 0.85,
                  + F.lit(damping)
                  * (F.col("__c") + F.col("__dm") / F.col("__n")),
                  round_to).alias("rank")))
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            r = r.localCheckpoint(eager=False)
     return r
 
 
 def hits(edges: DataFrame, iters: int = 3, src: str = "src",
-         dst: str = "dst", round_to: int = 9,
-         checkpoint_every: int = 0) -> DataFrame:
+         dst: str = "dst", round_to: int = 9) -> DataFrame:
     """HITS hubs and authorities (Kleinberg 1999, the mutual-
     reinforcement counterpart to :func:`pagerank`): ``iters`` fixed
     iterations of
@@ -165,9 +159,7 @@ def hits(edges: DataFrame, iters: int = 3, src: str = "src",
     contribution rows, weight-0 self rows standing in for the node
     set), with the L1 total folding back as a 1-row broadcast — the
     plan never touches the driver. The half-iteration's aggregated
-    output (its only twice-read relation) localCheckpoints lazily;
-    ``checkpoint_every`` truncates lineage every k rounds for deep
-    iteration counts.
+    output (its only twice-read relation) localCheckpoints lazily.
     """
     e = (edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
          .where(F.col(src) != F.col(dst))
@@ -201,7 +193,7 @@ def hits(edges: DataFrame, iters: int = 3, src: str = "src",
 
     h = nodes.select("v", F.lit(1.0).alias("hub"))
     a = nodes.select("v", F.lit(0.0).alias("authority"))
-    for i in range(iters):
+    for _ in range(iters):
         # each half-iteration's aggregated output is read twice (L1
         # total + normalized vector), so IT carries the lazy pin that
         # keeps plan size and executed work linear in `iters`
@@ -224,7 +216,4 @@ def hits(edges: DataFrame, iters: int = 3, src: str = "src",
         h = (h_agg.join(F.broadcast(h_sum))
              .select(F.col("g").alias("v"), F.round(
                  F.col("__h") / F.col("__hs"), round_to).alias("hub")))
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            a = a.localCheckpoint(eager=False)
-            h = h.localCheckpoint(eager=False)
     return a.join(h, "v").select("v", "authority", "hub")

@@ -272,8 +272,7 @@ def dsir_logweights(df: DataFrame, target_df: DataFrame,
                     n_buckets: int = 1024,
                     id_col: str = "doc_id",
                     text_col: str = "text",
-                    alpha: float = 1.0,
-                    persist: bool = True) -> DataFrame:
+                    alpha: float = 1.0) -> DataFrame:
     """Data Selection via Importance Resampling (DSIR — Xie et al.
     2023, "Data Selection for Language Models via Importance
     Resampling"): score every raw document by how much more likely
@@ -311,19 +310,18 @@ def dsir_logweights(df: DataFrame, target_df: DataFrame,
         # alpha=0 makes unseen-in-target buckets ln(0) -> NULL and
         # every touching document's logw silently NULL
         raise ValueError(f"alpha must be > 0: {alpha}")
-    fc = _hashed_ngram_counts(df, n_buckets, id_col, text_col)
-    if persist:
-        fc = _evict_then_cache(_DSIR_FC_CACHE, fc)
+    fc = _evict_then_cache(
+        _DSIR_FC_CACHE,
+        _hashed_ngram_counts(df, n_buckets, id_col, text_col))
     cr = fc.groupBy("bucket").agg(F.sum("c").alias("cr"))
     ct = _hashed_ngram_counts(target_df, n_buckets, None, text_col) \
         .withColumnRenamed("c", "ct")
-    if persist:
-        # both model relations are <= B rows with TWO consumers each
-        # (their scalar total + the model join): persisting them
-        # aggregates the cached feature relation exactly once and
-        # tokenizes the target corpus exactly once
-        cr = _evict_then_cache(_DSIR_CR_CACHE, cr)
-        ct = _evict_then_cache(_DSIR_CT_CACHE, ct)
+    # both model relations are <= B rows with TWO consumers each
+    # (their scalar total + the model join): persisting them
+    # aggregates the cached feature relation exactly once and
+    # tokenizes the target corpus exactly once
+    cr = _evict_then_cache(_DSIR_CR_CACHE, cr)
+    ct = _evict_then_cache(_DSIR_CT_CACHE, ct)
     tr = cr.agg(F.sum("cr").cast("double").alias("__tr__"))
     tt = ct.agg(F.sum("ct").cast("double").alias("__tt__"))
     a = float(alpha)
@@ -360,8 +358,7 @@ def dsir_resample(df: DataFrame, target_df: DataFrame, k: int,
                   id_col: str = "doc_id",
                   text_col: str = "text",
                   alpha: float = 1.0,
-                  salt: str = "dsir",
-                  persist: bool = True) -> DataFrame:
+                  salt: str = "dsir") -> DataFrame:
     """The selection half of DSIR: draw ``k`` documents without
     replacement with probability ∝ ``exp(logw / tau)`` via the
     Gumbel-top-k trick — ``score = logw/tau + Gumbel(0,1)`` and take
@@ -385,7 +382,7 @@ def dsir_resample(df: DataFrame, target_df: DataFrame, k: int,
         raise ValueError(f"tau must be > 0: {tau}")
     lw = dsir_logweights(df, target_df, n_buckets=n_buckets,
                          id_col=id_col, text_col=text_col,
-                         alpha=alpha, persist=persist)
+                         alpha=alpha)
     u = ((sample_key(F.col(id_col), salt) + F.lit(1))
          / F.lit(float(SAMPLE_MOD + 1)))
     score = (F.col("logw") / F.lit(float(tau))

@@ -553,11 +553,13 @@ def cosine_topk_pandas(corpus: DataFrame, queries: DataFrame, k: int = 5,
             ids = pdf[id_col].to_numpy()
             v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             vn = v / np.linalg.norm(v, axis=1, keepdims=True)
-            s = vn @ qn.T                       # |batch| x |queries|
+            s = np.round(vn @ qn.T, 6)          # |batch| x |queries|
             out_q, out_i, out_c = [], [], []
             for qi in range(len(qids)):
                 col = s[:, qi]
-                order = np.argsort(-col)
+                # the final window's order (6-dp cosine desc, id asc),
+                # so a batch never drops the tie the window would keep
+                order = np.lexsort((ids, -col))
                 taken = 0
                 for row in order:
                     if ids[row] == qids[qi]:
@@ -571,7 +573,7 @@ def cosine_topk_pandas(corpus: DataFrame, queries: DataFrame, k: int = 5,
             yield pd.DataFrame({
                 query_id_col: np.array(out_q, dtype=np.int64),
                 id_col: np.array(out_i, dtype=np.int64),
-                "cosine": np.round(np.array(out_c), 6),
+                "cosine": np.array(out_c, dtype=np.float64),
             })
 
     cand = ensure_parallelism(corpus).mapInPandas(

@@ -2358,8 +2358,8 @@ def bigram_logprob(df: DataFrame, id_col: str = "doc_id",
 
 
 def kn_bigram_logprob(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", d: float = 0.75,
-                      persist: bool = True) -> DataFrame:
+                      text_col: str = "text",
+                      d: float = 0.75) -> DataFrame:
     """Interpolated Kneser-Ney bigram perplexity (Kneser & Ney 1995;
     Chen & Goodman 1999's interpolated form) — the smoothing KenLM
     ships and CCNet's quality filter actually runs, upgrading the
@@ -2399,21 +2399,19 @@ def kn_bigram_logprob(df: DataFrame, id_col: str = "doc_id",
                    F.explode(word_ngrams(arr, 2)).alias("bg"))
     tf = (bg.groupBy(id_col, "bg")
           .agg(F.count(F.lit(1)).alias("tf")))
-    if persist:
-        tf = _evict_then_cache(_KN_TF_CACHE, tf)
+    tf = _evict_then_cache(_KN_TF_CACHE, tf)
     bgc = (tf.groupBy("bg")
            .agg(F.sum("tf").alias("cb"))
            .withColumn("w1", F.split("bg", " ").getItem(0))
            .withColumn("w2", F.split("bg", " ").getItem(1)))
-    if persist:
-        # bgc has FOUR consumers (ctx, pred, btot, the ptab join);
-        # column pruning specializes each one's bg-aggregate, which
-        # defeats exchange reuse, so without a persist every consumer
-        # re-aggregates the full cached tf — the round-11 plan showed
-        # 5 InMemoryTableScans of tf. The type table is
-        # vocabulary-sized; persist it once and the big relation is
-        # aggregated exactly once (guide §2.4).
-        bgc = _evict_then_cache(_KN_BGC_CACHE, bgc)
+    # bgc has FOUR consumers (ctx, pred, btot, the ptab join); column
+    # pruning specializes each one's bg-aggregate, which defeats
+    # exchange reuse, so without a persist every consumer
+    # re-aggregates the full cached tf — the round-11 plan showed 5
+    # InMemoryTableScans of tf. The type table is vocabulary-sized;
+    # persist it once and the big relation is aggregated exactly once
+    # (guide §2.4).
+    bgc = _evict_then_cache(_KN_BGC_CACHE, bgc)
     ctx = (bgc.groupBy("w1")
            .agg(F.sum("cb").alias("cl"),
                 F.count(F.lit(1)).alias("n1p_fw")))
@@ -2442,8 +2440,7 @@ _KN_BGC_CACHE = _register_cell("text.kn_bgc")
 
 
 def token_js_divergence(df: DataFrame, group_col: str = "source",
-                        text_col: str = "text",
-                        persist: bool = True) -> DataFrame:
+                        text_col: str = "text") -> DataFrame:
     """Jensen-Shannon divergence (bits) between each corpus slice's
     unigram token distribution and the WHOLE corpus's — the
     information-theoretic drift score of training-data mixture
@@ -2470,8 +2467,7 @@ def token_js_divergence(df: DataFrame, group_col: str = "source",
     that compressed relation feeds the corpus token counts, the
     per-group totals AND the scoring join, so it is persisted via
     the one-deep module cache (column pruning would otherwise
-    specialize each consumer into its own corpus scan —
-    ``persist=False`` opts into stateless recompute). The token-keyed
+    specialize each consumer into its own corpus scan). The token-keyed
     join carries at most one row per (group, token), so skew is
     bounded by the group count per token; group totals and the
     corpus total are broadcast.
@@ -2485,16 +2481,14 @@ def token_js_divergence(df: DataFrame, group_col: str = "source",
     gt = (toks.where(F.col("token") != "")
           .groupBy("grp", "token").agg(
               F.count(F.lit(1)).alias("c")))
-    if persist:
-        gt = _evict_then_cache(_JSD_GT_CACHE, gt)
+    gt = _evict_then_cache(_JSD_GT_CACHE, gt)
     ct = gt.groupBy("token").agg(F.sum("c").alias("ctot"))
     ng = gt.groupBy("grp").agg(F.sum("c").alias("ngrp"))
-    if persist:
-        # ng (one row per group) has TWO consumers — the corpus
-        # total and the scoring join; persisting it aggregates the
-        # cached (group, token) relation once, not twice (round 12,
-        # the LM type-table discipline)
-        ng = _evict_then_cache(_JSD_NG_CACHE, ng)
+    # ng (one row per group) has TWO consumers — the corpus total and
+    # the scoring join; persisting it aggregates the cached (group,
+    # token) relation once, not twice (round 12, the LM type-table
+    # discipline)
+    ng = _evict_then_cache(_JSD_NG_CACHE, ng)
     tot = ng.agg(F.sum("ngrp").cast("double").alias("__n__"))
     p = F.col("c") / F.col("ngrp")
     q = F.col("ctot") / F.col("__n__")

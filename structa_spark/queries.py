@@ -32,11 +32,18 @@ from .sources.tables import load_table
 QuerySpec = Tuple[Callable[[SparkSession, str], DataFrame], Optional[str]]
 
 REGISTRY: Dict[str, QuerySpec] = {}
+# bench.py suite alias -> registry name, in registration order
+BENCH: Dict[str, str] = {}
 
 
-def register(name: str, oracle: Optional[str] = None):
+def register(name: str, oracle: Optional[str] = None,
+             bench: Optional[str] = None):
     def deco(fn):
         REGISTRY[name] = (fn, oracle)
+        if bench is not None:
+            if bench in BENCH:
+                raise ValueError(f"duplicate bench alias {bench!r}")
+            BENCH[bench] = name
         return fn
     return deco
 
@@ -75,7 +82,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str,
 # provided by the DataFrame surface; these are the bench headliners)
 # ===========================================================================
 
-@register("q1_pricing_summary", oracle="""
+@register("q1_pricing_summary", bench="q1", oracle="""
 SELECT l_returnflag, l_linestatus,
        round(sum(l_quantity), 2)                                AS sum_qty,
        round(sum(l_extendedprice), 2)                           AS sum_base_price,
@@ -105,7 +112,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("l_returnflag", "l_linestatus"))
 
 
-@register("q3_top_orders", oracle="""
+@register("q3_top_orders", bench="q3", oracle="""
 SELECT l.l_orderkey AS o_key,
        round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
        o.o_orderdate, o.o_orderpriority
@@ -135,7 +142,7 @@ def q3_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(10))
 
 
-@register("q5_nation_revenue", oracle="""
+@register("q5_nation_revenue", bench="q5", oracle="""
 SELECT n.n_name,
        round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
 FROM region r JOIN nation n   ON n.n_regionkey = r.r_regionkey
@@ -167,7 +174,7 @@ def q5_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.desc("revenue"), F.asc("n_name")))
 
 
-@register("top_orders_per_customer", oracle="""
+@register("top_orders_per_customer", bench="window_topk", oracle="""
 SELECT * FROM (
   SELECT o_custkey, o_orderkey, round(o_totalprice, 2) AS total,
          row_number() OVER (PARTITION BY o_custkey
@@ -712,7 +719,7 @@ _LTOKS_SQL = ("list_filter(string_split_regex(trim(lower(text)), "
               "'\\s+'), t -> t <> '')")
 
 
-@register("token_stats_by_lang", oracle=f"""
+@register("token_stats_by_lang", bench="token_stats", oracle=f"""
 WITH d AS (
   SELECT lang, len({_TOKENS_SQL}) AS n_tokens,
          length(text) AS n_chars_m
@@ -833,7 +840,7 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("lang", "lang_pred"))
 
 
-@register("nb_lang_confusion", oracle="""
+@register("nb_lang_confusion", bench="nb_confusion", oracle="""
 WITH toks AS (
   SELECT doc_id, lang,
          unnest(list_filter(string_split_regex(trim(lower(text)),
@@ -976,7 +983,7 @@ def _ladder_tier_sql(n: int) -> str:
 )"""
 
 
-@register("longest_dup_span_report", oracle=f"""
+@register("longest_dup_span_report", bench="span_ladder", oracle=f"""
 WITH {_SPAN_WORDS_SQL},
 {_ladder_tier_sql(8)},
 {_ladder_tier_sql(16)},
@@ -1018,7 +1025,7 @@ def longest_dup_span_report(spark: SparkSession,
         d, min_n=8, rounds=3, threshold=16).orderBy("doc_id"))
 
 
-@register("span_dedup_texts", oracle="""
+@register("span_dedup_texts", bench="span_dedup", oracle="""
 WITH base AS (
   SELECT doc_id,
          list_filter(string_split_regex(trim(text), '\\s+'),
@@ -1217,7 +1224,7 @@ def reflm_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id"))
 
 
-@register("ccnet_perplexity_buckets", oracle="""
+@register("ccnet_perplexity_buckets", bench="ccnet_buckets", oracle="""
 WITH train_toks AS (
   SELECT doc_id,
          list_filter(string_split_regex(trim(lower(text)), '\\s+'),
@@ -1337,7 +1344,7 @@ def ccnet_perplexity_buckets(spark: SparkSession,
             .orderBy("lang", "bucket"))
 
 
-@register("kn_bigram_nll", oracle="""
+@register("kn_bigram_nll", bench="kn_bigram_nll", oracle="""
 WITH w AS (
   SELECT doc_id,
          list_filter(string_split_regex(trim(lower(text)), '\\s+'),
@@ -1389,7 +1396,7 @@ def kn_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.kn_bigram_logprob(d).orderBy("doc_id")
 
 
-@register("source_token_jsd", oracle=f"""
+@register("source_token_jsd", bench="token_jsd", oracle=f"""
 WITH toks AS (
   SELECT source AS grp, unnest({_LTOKS_SQL}) AS token
   FROM documents
@@ -1491,7 +1498,7 @@ def incremental_span_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id"))
 
 
-@register("source_curation_report", oracle=f"""
+@register("source_curation_report", bench="curation_report", oracle=f"""
 WITH f AS (
   {_quality_f_sql('source,')}),
 q AS (
@@ -1605,7 +1612,7 @@ _NORM_B = ("sqrt(list_sum(list_transform(range(1, len(b.embedding) + 1), "
            "i -> b.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE)))")
 
 
-@register("cosine_topk", oracle=f"""
+@register("cosine_topk", bench="cosine_topk", oracle=f"""
 WITH scored AS (
   SELECT b.vec_id AS query_id, a.vec_id,
          round({_DOT_SQL} / ({_NORM_A} * {_NORM_B}), 6) AS cosine
@@ -1629,7 +1636,7 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("query_id", "rank"))
 
 
-@register("hard_negative_topk", oracle=f"""
+@register("hard_negative_topk", bench="hard_negatives", oracle=f"""
 WITH scored AS (
   SELECT b.vec_id AS query_id, a.vec_id, a.label,
          round({_DOT_SQL} / ({_NORM_A} * {_NORM_B}), 6) AS cosine
@@ -1683,7 +1690,7 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # against DuckDB's native temporal SQL (ASOF JOIN / window functions)
 # ===========================================================================
 
-@register("asof_purchase_click", oracle="""
+@register("asof_purchase_click", bench="asof_join", oracle="""
 SELECT p.event_id AS purchase_id, p.user_id, c.event_id AS click_id
 FROM (SELECT * FROM events WHERE event_type = 'purchase') p
 ASOF JOIN (SELECT * FROM events WHERE event_type = 'click') c
@@ -1744,7 +1751,7 @@ def range_join_purchase_views(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("purchase_id"))
 
 
-@register("windowed_event_stats", oracle="""
+@register("windowed_event_stats", bench="windowed_stats", oracle="""
 SELECT date_trunc('day', ts)          AS window_start,
        event_type,
        count(*)                       AS n_events,
@@ -1827,7 +1834,7 @@ def zorder_layout_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("event_id"))
 
 
-@register("sessionize_events", oracle="""
+@register("sessionize_events", bench="sessionize", oracle="""
 WITH flagged AS (
   SELECT user_id, ts, value,
          CASE WHEN lag(ts) OVER w IS NULL
@@ -1867,7 +1874,7 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("user_id", "session_start"))
 
 
-@register("rollup_nation_year", oracle="""
+@register("rollup_nation_year", bench="rollup", oracle="""
 SELECT COALESCE(n.n_name, 'ALL')                          AS nation,
        COALESCE(CAST(year(o.o_orderdate) AS VARCHAR), 'ALL') AS o_year,
        round(sum(o.o_totalprice), 2)                      AS total_price,
@@ -2010,7 +2017,7 @@ def cosine_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("query_id", "rank"))
 
 
-@register("json_props_stats", oracle="""
+@register("json_props_stats", bench="json_props", oracle="""
 SELECT event_type,
        count(props)                                   AS n_props,
        CAST(sum(CAST(props->>'k' AS BIGINT)) AS BIGINT) AS sum_k,
@@ -2138,7 +2145,7 @@ _DRAW_SQL = (md5_long_sql("CAST(doc_id AS VARCHAR)")
              + " % 1000000")
 
 
-@register("weighted_sample_by_source", oracle=f"""
+@register("weighted_sample_by_source", bench="weighted_sample", oracle=f"""
 WITH s AS (
   SELECT source, doc_id, CAST(n_chars AS DOUBLE) AS weight,
          round(ln((({md5_long_sql(
@@ -2174,7 +2181,7 @@ def weighted_sample_by_source(spark: SparkSession,
         .orderBy("source", "sample_rank"))
 
 
-@register("length_bucket_batches", oracle=f"""
+@register("length_bucket_batches", bench="length_buckets", oracle=f"""
 WITH b AS (
   SELECT doc_id, CAST(n_chars AS BIGINT) AS length,
          CAST(1 << CAST(ceil(log2(greatest(n_chars, 64)))
@@ -2213,7 +2220,7 @@ def length_bucket_batches(spark: SparkSession,
         .orderBy("doc_id"))
 
 
-@register("confusable_spoof_screen", oracle="""
+@register("confusable_spoof_screen", bench="confusable", oracle="""
 WITH s AS (
   SELECT doc_id,
          text || CASE doc_id % 4 WHEN 0 THEN ' pаypаl' WHEN 1 THEN ' bаnk' WHEN 2 THEN ' tοp' ELSE '' END AS t
@@ -2252,7 +2259,7 @@ def confusable_spoof_screen(spark: SparkSession,
             .orderBy("doc_id"))
 
 
-@register("html_table_extract", oracle="""
+@register("html_table_extract", bench="html_tables", oracle="""
 SELECT doc_id, 0 AS table_idx, 0 AS row_idx, 0 AS col_idx,
        TRUE AS is_header, 'Head A' AS cell_text
 FROM documents
@@ -2505,7 +2512,7 @@ def ivf_assignment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("list_id"))
 
 
-@register("diverse_sample_by_cluster", oracle=f"""
+@register("diverse_sample_by_cluster", bench="diverse_sample", oracle=f"""
 WITH cents AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec
                FROM embeddings WHERE vec_id < 4),
 scored AS (
@@ -2613,7 +2620,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "n_chars").orderBy("doc_id"))
 
 
-@register("repetition_signals", oracle="""
+@register("repetition_signals", bench="repetition", oracle="""
 WITH toks AS (
   SELECT doc_id,
          list_filter(string_split_regex(trim(lower(text)), '\\s+'),
@@ -2659,7 +2666,7 @@ def repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id"))
 
 
-@register("passage_dedup_summary", oracle=f"""
+@register("passage_dedup_summary", bench="passage_dedup", oracle=f"""
 WITH toks AS (
   SELECT doc_id,
          list_filter(string_split_regex(trim(lower(text)), '\\s+'),
@@ -2836,7 +2843,7 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return coded.select("vec_id", *cols).orderBy("vec_id")
 
 
-@register("pq_adc_topk", oracle="""
+@register("pq_adc_topk", bench="pq_adc_topk", oracle="""
 WITH cw AS (
   SELECT vec_id AS k, embedding::DOUBLE[] AS e
   FROM embeddings WHERE vec_id < 4
@@ -3044,7 +3051,7 @@ def _recall_report(exact: DataFrame, approx: DataFrame) -> DataFrame:
             .orderBy("query_id"))
 
 
-@register("bitext_margin_pairs", oracle="""
+@register("bitext_margin_pairs", bench="bitext_margin", oracle="""
 WITH x AS (
   SELECT vec_id AS x_id, embedding::DOUBLE[] AS v
   FROM embeddings WHERE vec_id % 2 = 0 AND vec_id < 12
@@ -3106,7 +3113,7 @@ def bitext_margin_pairs(spark: SparkSession,
             .orderBy("x_id"))
 
 
-@register("matryoshka_recall_at_k", oracle="""
+@register("matryoshka_recall_at_k", bench="matryoshka", oracle="""
 WITH tscored AS (
   SELECT q.vec_id AS query_id, e.vec_id,
          round(list_inner_product(
@@ -3274,7 +3281,7 @@ def pq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_report(exact, adc)
 
 
-@register("training_manifest", oracle=f"""
+@register("training_manifest", bench="training_manifest", oracle=f"""
 WITH f AS (
   {_quality_f_sql('lang,')}),
 scored AS (
@@ -3424,7 +3431,7 @@ def audio_header_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mm.audio_metadata(media).orderBy("media_id")
 
 
-@register("tfidf_top_terms", oracle="""
+@register("tfidf_top_terms", bench="tfidf", oracle="""
 WITH toks AS (
   SELECT doc_id,
          unnest(list_filter(string_split_regex(trim(lower(text)),
@@ -3477,7 +3484,7 @@ _BM25_VALUES = ", ".join(
     for t in terms)
 
 
-@register("bm25_topk", oracle=f"""
+@register("bm25_topk", bench="bm25_topk", oracle=f"""
 WITH qterms(query_id, token) AS (VALUES {_BM25_VALUES}),
 toks AS MATERIALIZED (
   SELECT doc_id,
@@ -3666,7 +3673,7 @@ FROM scored ORDER BY doc_id""")
     return "".join(parts)
 
 
-@register("code_quality_flags", oracle="""
+@register("code_quality_flags", bench="code_quality", oracle="""
 WITH pages AS (
   SELECT doc_id,
          text || chr(10) || repeat('x', doc_id % 150 + 10)
@@ -3717,7 +3724,7 @@ def code_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_alnum_frac=0.5).orderBy("doc_id"))
 
 
-@register("pii_card_scan", oracle="""
+@register("pii_card_scan", bench="pii_cards", oracle="""
 WITH pages AS (
   SELECT doc_id,
          text || ' ref ' || lpad(CAST(doc_id AS VARCHAR), 15, '4')
@@ -3774,7 +3781,7 @@ def pii_card_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id"))
 
 
-@register("quality_classifier_scores",
+@register("quality_classifier_scores", bench="quality_classifier",
           oracle=_logistic_sql(12, 256, 2.0))
 def quality_classifier_scores(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
@@ -3807,7 +3814,7 @@ def quality_classifier_scores(spark: SparkSession,
     return (text.logistic_quality_scores(d, w, b).orderBy("doc_id"))
 
 
-@register("contamination_check", oracle=f"""
+@register("contamination_check", bench="decontaminate", oracle=f"""
 WITH ev AS (
   SELECT DISTINCT unnest({_shingles_sql()}) AS s
   FROM documents WHERE doc_id < 20
@@ -3852,7 +3859,7 @@ _BLOOM_POS_SQL = " UNION ".join(
     for a, b in MINHASH_PARAMS[:dedup.BLOOM_HASHES])
 
 
-@register("bloom_contamination_flags", oracle=f"""
+@register("bloom_contamination_flags", bench="bloom_decontam", oracle=f"""
 WITH ev AS (
   SELECT DISTINCT unnest({_shingles_sql()}) AS s
   FROM documents WHERE doc_id < 20
@@ -4050,7 +4057,7 @@ _ENC_FRAC_SQL = ("round(CASE WHEN length(t) > 0 THEN "
                  "'', 'g'))) / length(t) ELSE 0.0 END, 4)")
 
 
-@register("encoding_quality_report", oracle=f"""
+@register("encoding_quality_report", bench="encoding_screen", oracle=f"""
 WITH aug AS (
   SELECT doc_id,
          coalesce(text, '')
@@ -4114,7 +4121,7 @@ def encoding_quality_report(spark: SparkSession,
         .orderBy("doc_id"))
 
 
-@register("source_vocab_overlap", oracle="""
+@register("source_vocab_overlap", bench="vocab_overlap", oracle="""
 WITH st AS (
   SELECT DISTINCT source, token FROM (
     SELECT source,
@@ -4271,7 +4278,7 @@ def c4_rule_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id"))
 
 
-@register("c4_line_clean", oracle="""
+@register("c4_line_clean", bench="c4_line_clean", oracle="""
 WITH d AS (
   SELECT doc_id,
          list_filter(string_split_regex(trim(coalesce(text, '')),
@@ -4354,7 +4361,7 @@ def c4_line_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id"))
 
 
-@register("gopher_quality_flags", oracle="""
+@register("gopher_quality_flags", bench="gopher_quality", oracle="""
 WITH d AS (
   SELECT doc_id,
          list_filter(string_split_regex(trim(coalesce(text, '')),
@@ -4470,7 +4477,7 @@ def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id"))
 
 
-@register("quality_gopher_calibration", oracle=f"""
+@register("quality_gopher_calibration", bench="quality_calib", oracle=f"""
 WITH f AS ({{Q_F}}),
 q AS (
   SELECT doc_id, round({{Q_Q}}, 4) AS q FROM f
@@ -4578,7 +4585,7 @@ def quality_gopher_calibration(spark: SparkSession,
 
 
 
-@register("gopher_dup_fractions", oracle="""
+@register("gopher_dup_fractions", bench="gopher_dup", oracle="""
 WITH d AS (
   SELECT doc_id,
          list_filter(string_split_regex(trim(coalesce(text, '')),
@@ -4713,7 +4720,7 @@ def gopher_dup_fractions(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id"))
 
 
-@register("corpus_filter_report", oracle="""
+@register("corpus_filter_report", bench="filter_report", oracle="""
 WITH d AS (
   SELECT doc_id, source,
          list_filter(string_split_regex(trim(coalesce(text, '')),
@@ -4923,7 +4930,7 @@ def corpus_filter_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("source"))
 
 
-@register("repetition_ngram_profile", oracle="""
+@register("repetition_ngram_profile", bench="ngram_profile", oracle="""
 WITH t AS (
   SELECT doc_id,
          list_filter(string_split_regex(trim(lower(text)), '\\s+'),
@@ -4968,7 +4975,7 @@ def repetition_ngram_profile(spark: SparkSession,
     return text.top_ngram_fracs(d, ns=(2, 3, 4)).orderBy("doc_id", "n")
 
 
-@register("fuzzy_contamination_pairs", oracle=f"""
+@register("fuzzy_contamination_pairs", bench="fuzzy_decontam", oracle=f"""
 WITH ev AS (
   SELECT doc_id AS eval_id, {_shingles_sql()} AS sh
   FROM documents WHERE doc_id < 20
@@ -5004,7 +5011,7 @@ def fuzzy_contamination_pairs(spark: SparkSession,
             .orderBy("doc_id", "eval_id"))
 
 
-@register("source_curation_report_v2", oracle=f"""
+@register("source_curation_report_v2", bench="curation_v2", oracle=f"""
 WITH d AS (
   SELECT doc_id, source,
          coalesce(text, '') AS t,
@@ -5082,7 +5089,7 @@ def source_curation_report_v2(spark: SparkSession,
             .orderBy("source"))
 
 
-@register("scrub_eval_spans", oracle="""
+@register("scrub_eval_spans", bench="scrub_spans", oracle="""
 WITH base AS (
   SELECT doc_id,
          list_filter(string_split_regex(trim(text), '\\s+'),
@@ -5203,7 +5210,7 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("lang", "shard", "pack_id"))
 
 
-@register("unigram_nll", oracle=f"""
+@register("unigram_nll", bench="unigram_nll", oracle=f"""
 WITH toks AS (
   SELECT doc_id,
          unnest(list_filter(string_split_regex(trim(lower(text)),
@@ -5266,7 +5273,7 @@ def compression_ratio_screen(spark: SparkSession,
             .orderBy("doc_id"))
 
 
-@register("blocklist_screen", oracle="""
+@register("blocklist_screen", bench="blocklist", oracle="""
 WITH toks AS (
   SELECT doc_id,
          unnest(list_filter(string_split_regex(trim(lower(text)),
@@ -5303,7 +5310,7 @@ def blocklist_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("doc_id"))
 
 
-@register("fim_split_coords", oracle=f"""
+@register("fim_split_coords", bench="fim_coords", oracle=f"""
 WITH base AS (
   SELECT doc_id, length(text) AS n,
          {md5_long_sql("doc_id || ':fim'")} % 1000 AS draw,
@@ -5335,7 +5342,7 @@ def fim_split_coords(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampling.fim_split_coords(d, rate=0.5).orderBy("doc_id")
 
 
-@register("doremi_domain_weights", oracle="""
+@register("doremi_domain_weights", bench="doremi", oracle="""
 WITH toks AS (
   SELECT doc_id,
          unnest(list_filter(string_split_regex(trim(lower(text)),
@@ -5396,7 +5403,7 @@ def doremi_domain_weights(spark: SparkSession,
     return sampling.doremi_weights(joined, tau=0.5).orderBy("source")
 
 
-@register("semantic_dedup_summary", oracle=f"""
+@register("semantic_dedup_summary", bench="semantic_dedup", oracle=f"""
 WITH seeds AS (
   SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec
   FROM embeddings WHERE vec_id < 4
@@ -5563,7 +5570,7 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(20))
 
 
-@register("wordpiece_merge_candidates", oracle="""
+@register("wordpiece_merge_candidates", bench="wordpiece_step", oracle="""
 WITH toks AS (
   SELECT unnest(list_filter(string_split_regex(trim(lower(text)),
                                                '\\s+'),
@@ -5711,7 +5718,7 @@ _UNIGRAM_TRAIN_CTES = """toks AS (
 )"""
 
 
-@register("unigram_tokenizer_vocab", oracle=f"""
+@register("unigram_tokenizer_vocab", bench="unigram_vocab", oracle=f"""
 WITH RECURSIVE {_UNIGRAM_TRAIN_CTES}
 SELECT s AS piece, n_uses, logp
 FROM model ORDER BY n_uses DESC, piece
@@ -5746,7 +5753,7 @@ def unigram_tokenizer_vocab(spark: SparkSession,
         "piece string, n_uses long, logp double")
 
 
-@register("unigram_encode_fertility", oracle=f"""
+@register("unigram_encode_fertility", bench="unigram_encode", oracle=f"""
 WITH RECURSIVE {_UNIGRAM_TRAIN_CTES},
 lw AS (
   SELECT lang,
@@ -5941,7 +5948,7 @@ _MIX_RATES_SQL = f"""
   )"""
 
 
-@register("mixed_resample_counts", oracle=f"""
+@register("mixed_resample_counts", bench="mixed_resample", oracle=f"""
 WITH {_MIX_RATES_SQL},
 c AS (
   SELECT d.source,
@@ -6024,7 +6031,7 @@ def video_header_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mm.video_metadata(media).orderBy("media_id")
 
 
-@register("video_frame_index", oracle="""
+@register("video_frame_index", bench="video_frames", oracle="""
 WITH ids AS (
   SELECT doc_id AS media_id, doc_id % 50 + 1 AS n,
          (doc_id % 50 + 2) // 2 AS h
@@ -6420,7 +6427,7 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("id_a", "id_b"))
 
 
-@register("embedding_health_report", oracle="""
+@register("embedding_health_report", bench="embed_health", oracle="""
 WITH v AS (
   SELECT floor(sqrt(list_sum(list_transform(
              embedding, x -> x::DOUBLE * x::DOUBLE)))
@@ -6519,7 +6526,7 @@ def embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("vec_id"))
 
 
-@register("int8_topk_search", oracle=f"""
+@register("int8_topk_search", bench="int8_topk", oracle=f"""
 WITH codes AS (
   SELECT vec_id, embedding,
          list_transform(embedding,
@@ -6570,7 +6577,7 @@ def int8_topk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("query_id", "rank"))
 
 
-@register("hybrid_rrf_topk", oracle=f"""
+@register("hybrid_rrf_topk", bench="hybrid_rrf", oracle=f"""
 WITH dense AS (
   SELECT b.vec_id AS query_id, a.vec_id,
          row_number() OVER (PARTITION BY b.vec_id ORDER BY
@@ -6666,7 +6673,7 @@ def daily_event_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 - F.lag("avg_value").over(w), 4))
             .orderBy("day"))
 
-@register("decoded_media_stats", oracle="""
+@register("decoded_media_stats", bench="decoded_media", oracle="""
 WITH ids AS (SELECT doc_id FROM documents),
 png AS (
   SELECT i.doc_id AS media_id, 'png' AS kind,
@@ -6839,7 +6846,7 @@ def resized_media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mm.media_stats(resized).orderBy("media_id")
 
 
-@register("image_dhash_values", oracle="""
+@register("image_dhash_values", bench="image_dhash", oracle="""
 WITH ids AS (
   SELECT doc_id AS media_id,
          8 + doc_id % 7 AS w, 6 + doc_id % 5 AS h
@@ -6977,7 +6984,7 @@ def image_phash_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mm.image_phash(media).orderBy("media_id")
 
 
-@register("image_entropy_stats", oracle="""
+@register("image_entropy_stats", bench="image_entropy", oracle="""
 WITH ids AS (
   SELECT doc_id AS media_id,
          8 + doc_id % 7 AS w, 6 + doc_id % 5 AS h
@@ -7160,7 +7167,8 @@ def _mjpeg_cluster_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(build, "media_id long, payload binary")
 
 
-@register("video_dup_groups", oracle=_VIDEO_GROUPS_CTE + """
+@register("video_dup_groups", bench="video_dedup",
+          oracle=_VIDEO_GROUPS_CTE + """
 SELECT media_id, group_id FROM grp ORDER BY media_id
 """)
 def video_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7227,7 +7235,8 @@ def video_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _media_dedup_keep(spark, sf_dir, groups)
 
 
-@register("video_scene_cuts", oracle=_VIDEO_GROUPS_CTE + """,
+@register("video_scene_cuts", bench="video_scene_cuts",
+          oracle=_VIDEO_GROUPS_CTE + """,
 lagd AS (
   SELECT media_id, f AS frame_idx,
          bit_count(xor(dhash,
@@ -7445,8 +7454,8 @@ def _media_dedup_keep(spark: SparkSession, sf_dir: str,
             .orderBy("media_id"))
 
 
-@register("image_dedup_keep", oracle=_media_keep_best_sql(
-    _IMAGE_GROUPS_CTE))
+@register("image_dedup_keep", bench="image_dedup_keep",
+          oracle=_media_keep_best_sql(_IMAGE_GROUPS_CTE))
 def image_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image dedup TERMINATED in a keep/drop decision — the endpoint
     a curation pipeline actually ships: the image_dup_groups spine
@@ -7466,7 +7475,7 @@ def image_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, _image_cluster_groups(spark, sf_dir))
 
 
-@register("audio_envelope_hashes", oracle="""
+@register("audio_envelope_hashes", bench="audio_envhash", oracle="""
 WITH ids AS (
   SELECT doc_id AS media_id, doc_id % 400 + 1 AS n
   FROM documents
@@ -7589,7 +7598,7 @@ def audio_zcr_features(spark: SparkSession,
     return mm.audio_zero_crossings(media).orderBy("media_id")
 
 
-@register("audio_spectral_features", oracle="""
+@register("audio_spectral_features", bench="audio_spectral", oracle="""
 WITH ids AS (
   SELECT doc_id AS media_id, doc_id % 400 + 1 AS n,
          least(doc_id % 400 + 1, 64) AS m
@@ -7677,7 +7686,7 @@ def audio_spectral_features(spark: SparkSession,
     return mm.audio_spectral_features(media).orderBy("media_id")
 
 
-@register("jpeg_quality_screen", oracle="""
+@register("jpeg_quality_screen", bench="jpeg_quality", oracle="""
 SELECT doc_id,
        1 AS n_tables,
        CAST(1 + doc_id % 4 AS INT) AS q_min,
@@ -7727,7 +7736,7 @@ def jpeg_quality_screen(spark: SparkSession,
             .orderBy("doc_id"))
 
 
-@register("audio_mfcc_features", oracle="""
+@register("audio_mfcc_features", bench="audio_mfcc", oracle="""
 WITH ids AS (
   SELECT doc_id AS media_id, doc_id % 400 + 1 AS n,
          least(doc_id % 400 + 1, 64) AS m
@@ -7837,7 +7846,7 @@ def audio_mfcc_features(spark: SparkSession,
     return mm.audio_mfcc_features(media).orderBy("media_id")
 
 
-@register("audio_resample", oracle="""
+@register("audio_resample", bench="audio_resample", oracle="""
 WITH ids AS (
   SELECT doc_id AS media_id, 20 + doc_id % 40 AS n,
          2 + doc_id % 3 AS a
@@ -7917,7 +7926,7 @@ def audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("media_id", "out_idx"))
 
 
-@register("audio_clipping_stats", oracle="""
+@register("audio_clipping_stats", bench="audio_clipping", oracle="""
 WITH ids AS (
   SELECT doc_id AS media_id, doc_id % 300 + 1 AS n FROM documents
 ),
@@ -8014,7 +8023,7 @@ def audio_clipping_stats(spark: SparkSession,
     return mm.audio_clipping_stats(media).orderBy("media_id")
 
 
-@register("audio_vad_segments", oracle="""
+@register("audio_vad_segments", bench="audio_vad", oracle="""
 WITH ids AS (
   SELECT doc_id AS media_id, doc_id % 600 + 40 AS n FROM documents
 ), s AS (
@@ -8263,8 +8272,8 @@ def _audio_cluster_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.coalesce("label", "media_id").alias("group_id")))
 
 
-@register("audio_dedup_keep", oracle=_media_keep_best_sql(
-    _AUDIO_GROUPS_CTE))
+@register("audio_dedup_keep", bench="audio_dedup_keep",
+          oracle=_media_keep_best_sql(_AUDIO_GROUPS_CTE))
 def audio_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio dedup TERMINATED in a keep/drop decision — the audio
     twin of image_dedup_keep: the audio_dup_groups spine (real WAV
@@ -8369,7 +8378,7 @@ def dsir_logweights_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id"))
 
 
-@register("dsir_resample_topk", oracle=f"""
+@register("dsir_resample_topk", bench="dsir_select", oracle=f"""
 WITH {_DSIR_LW_SQL}
 SELECT doc_id, n_feats, logw,
        round(logw / 2.0 - ln(-ln(
@@ -8391,7 +8400,7 @@ def dsir_resample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.desc("score"), "doc_id"))
 
 
-@register("bigram_nll", oracle="""
+@register("bigram_nll", bench="bigram_nll", oracle="""
 WITH w AS (
   SELECT doc_id,
          list_filter(string_split_regex(trim(lower(text)), '\\s+'),
@@ -8633,7 +8642,7 @@ def _cms_cells_sql(src: str, depth: int = 4, width: int = 1024,
     return "\nUNION ALL\n".join(sel)
 
 
-@register("cms_heavy_hitters", oracle=f"""
+@register("cms_heavy_hitters", bench="cms_hitters", oracle=f"""
 WITH toks AS (
   SELECT unnest(list_filter(string_split_regex(trim(lower(text)),
                                                '\\s+'),
@@ -8699,7 +8708,7 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.desc("exact_count"), F.asc("token")))
 
 
-@register("alpha_lang_weights", oracle="""
+@register("alpha_lang_weights", bench="alpha_weights", oracle="""
 WITH per AS (
   SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
          CAST(sum(len(list_filter(
@@ -8872,7 +8881,7 @@ def zipf_vocab_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.zipf_fit(d, top_n=1000)
 
 
-@register("heaps_vocab_growth", oracle="""
+@register("heaps_vocab_growth", bench="heaps_growth", oracle="""
 WITH bounds AS (
   SELECT min(doc_id) AS lo, max(doc_id) AS hi FROM documents
 ), tk AS (
@@ -9037,7 +9046,7 @@ def variant_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("event_type"))
 
 
-@register("decompressed_text_stats", oracle="""
+@register("decompressed_text_stats", bench="decompress", oracle="""
 SELECT doc_id AS media_id,
        CASE doc_id % 4 WHEN 0 THEN 'gzip' WHEN 1 THEN 'zlib'
                        WHEN 2 THEN 'bz2' ELSE 'xz' END AS codec,
@@ -9119,7 +9128,7 @@ def html_extracted_text(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id"))
 
 
-@register("html_link_extract", oracle="""
+@register("html_link_extract", bench="html_links", oracle="""
 SELECT doc_id, 0 AS link_idx,
        'http://' || source || '.example.com/' || lang AS href,
        'see ' || lang AS anchor,
@@ -9168,7 +9177,7 @@ def html_link_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MOJI_TAIL = " — naïve café".encode("utf-8").decode("latin-1")
 
 
-@register("sentence_align_beads", oracle="""
+@register("sentence_align_beads", bench="sentence_align", oracle="""
 WITH d AS (
   SELECT doc_id,
          list_filter(string_split_regex(trim(text), '\\s+'),
@@ -9222,7 +9231,7 @@ def sentence_align_beads(spark: SparkSession,
             .orderBy("doc_id", "bead_no"))
 
 
-@register("pii_iban_scan", oracle="""
+@register("pii_iban_scan", bench="iban_scan", oracle="""
 SELECT doc_id,
        CASE WHEN doc_id % 4 = 3 THEN 0 ELSE 1 END AS n_candidates,
        CASE WHEN doc_id % 4 IN (0, 2) THEN 1 ELSE 0 END AS n_valid,
@@ -9252,7 +9261,7 @@ def pii_iban_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.iban_scan(paged).orderBy("doc_id")
 
 
-@register("anchor_text_profile", oracle="""
+@register("anchor_text_profile", bench="anchor_text", oracle="""
 WITH per AS (
   SELECT source || '.example.com' AS dst_host, lang AS token,
          count(*) AS n
@@ -9385,7 +9394,7 @@ def adaptive_length_gate(spark: SparkSession,
             .orderBy("doc_id"))
 
 
-@register("mojibake_repair", oracle="""
+@register("mojibake_repair", bench="mojibake_repair", oracle="""
 SELECT doc_id,
        text || CASE WHEN doc_id % 3 = 0 THEN ' — naïve café'
                     ELSE ' plain tail' END AS clean_text,
@@ -9415,7 +9424,7 @@ def mojibake_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id"))
 
 
-@register("robots_policy_check", oracle="""
+@register("robots_policy_check", bench="robots_policy", oracle="""
 SELECT doc_id, '/private/' || lang || '/page' AS path,
        TRUE AS allowed
 FROM documents
@@ -9469,7 +9478,7 @@ def robots_policy_check(spark: SparkSession,
             .orderBy("doc_id", "path"))
 
 
-@register("markdown_extracted_text", oracle="""
+@register("markdown_extracted_text", bench="markdown_extract", oracle="""
 SELECT doc_id,
        'Title quoted ' || trim(regexp_replace(text, '\\s+', ' ', 'g'))
            || ' see docs item second a b' AS clean_text,
@@ -9502,7 +9511,7 @@ def markdown_extracted_text(spark: SparkSession,
             .orderBy("doc_id"))
 
 
-@register("latex_extracted_text", oracle="""
+@register("latex_extracted_text", bench="latex_extract", oracle="""
 SELECT doc_id,
        'Intro ' || trim(regexp_replace(text, '\\s+', ' ', 'g'))
            || ' is 100% sure end' AS latex_text,
@@ -9537,7 +9546,7 @@ def latex_extracted_text(spark: SparkSession,
             .orderBy("doc_id"))
 
 
-@register("pdf_extracted_text", oracle="""
+@register("pdf_extracted_text", bench="pdf_extract", oracle="""
 SELECT doc_id,
        text || chr(10) || '(doc ' || CAST(doc_id AS VARCHAR) || ')'
            AS pdf_text,
@@ -9585,7 +9594,7 @@ def pdf_extracted_text(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id"))
 
 
-@register("docx_extracted_text", oracle="""
+@register("docx_extracted_text", bench="docx_extract", oracle="""
 SELECT doc_id,
        text || chr(10) || 'para & <' || CAST(doc_id AS VARCHAR) || '>'
            AS docx_text,
@@ -9629,7 +9638,7 @@ def docx_extracted_text(spark: SparkSession,
             .orderBy("doc_id"))
 
 
-@register("office_extracted_text", oracle="""
+@register("office_extracted_text", bench="office_extract", oracle="""
 SELECT doc_id,
        CASE WHEN doc_id % 2 = 0 THEN 'docx' ELSE 'odt' END AS kind,
        text || chr(10) || 'close & <' || CAST(doc_id AS VARCHAR)
@@ -9673,7 +9682,7 @@ def office_extracted_text(spark: SparkSession,
             .orderBy("doc_id"))
 
 
-@register("epub_extracted_text", oracle="""
+@register("epub_extracted_text", bench="epub_extract", oracle="""
 SELECT doc_id,
        trim(regexp_replace(text, '\\s+', ' ', 'g')) || chr(10)
            || 'end & ch' || CAST(doc_id AS VARCHAR) AS epub_text,
@@ -9720,7 +9729,7 @@ def epub_extracted_text(spark: SparkSession,
             .orderBy("doc_id"))
 
 
-@register("pptx_extracted_text", oracle="""
+@register("pptx_extracted_text", bench="pptx_extract", oracle="""
 SELECT doc_id,
        text || chr(10) || 'slide & <' || CAST(doc_id AS VARCHAR)
            || '>' AS pptx_text,
@@ -9763,7 +9772,7 @@ def pptx_extracted_text(spark: SparkSession,
             .orderBy("doc_id"))
 
 
-@register("xlsx_extracted_text", oracle="""
+@register("xlsx_extracted_text", bench="xlsx_extract", oracle="""
 SELECT doc_id,
        text || chr(10) || 'cell & <' || CAST(doc_id AS VARCHAR)
            || '>' AS xlsx_text,
@@ -9851,7 +9860,7 @@ def pdf_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id"))
 
 
-@register("ipynb_extracted_cells", oracle="""
+@register("ipynb_extracted_cells", bench="ipynb_cells", oracle="""
 SELECT doc_id, 0 AS cell_idx, 'markdown' AS cell_type,
        'python' AS kernel_lang,
        '# Title' || chr(10) || text AS cell_text
@@ -9886,7 +9895,7 @@ def ipynb_extracted_cells(spark: SparkSession,
             .orderBy("doc_id", "cell_idx"))
 
 
-@register("subtitle_extracted_cues", oracle="""
+@register("subtitle_extracted_cues", bench="subtitle_cues", oracle="""
 SELECT doc_id, 0 AS cue_idx,
        CAST((doc_id % 10) * 1000 AS BIGINT)          AS start_ms,
        CAST((10 + doc_id % 10) * 1000 + 500 AS BIGINT) AS end_ms,
@@ -9928,7 +9937,7 @@ def subtitle_extracted_cues(spark: SparkSession,
             .orderBy("doc_id", "cue_idx"))
 
 
-@register("code_license_screen", oracle="""
+@register("code_license_screen", bench="license_screen", oracle="""
 SELECT doc_id,
        CASE doc_id % 5
             WHEN 0 THEN 'MIT'
@@ -9974,7 +9983,7 @@ def code_license_screen(spark: SparkSession,
             .orderBy("doc_id"))
 
 
-@register("preference_pairs", oracle=f"""
+@register("preference_pairs", bench="preference_pairs", oracle=f"""
 WITH f AS (
   {_quality_f_sql('source,')}),
 scored AS (
@@ -10013,7 +10022,7 @@ def preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("source", "pair_idx"))
 
 
-@register("chat_template_render", oracle="""
+@register("chat_template_render", bench="chat_render", oracle="""
 SELECT doc_id,
        '<|im_start|>system' || chr(10) ||
        'You are helpful.<|im_end|>' || chr(10) ||
@@ -10118,7 +10127,8 @@ GROUP BY cid ORDER BY cluster_id""")
     return "".join(parts)
 
 
-@register("kmeans_cluster_profile", oracle=_kmeans_oracle_sql())
+@register("kmeans_cluster_profile", bench="kmeans_profile",
+          oracle=_kmeans_oracle_sql())
 def kmeans_cluster_profile(spark: SparkSession,
                            sf_dir: str) -> DataFrame:
     """Offline k-means training, values-checked through THREE full
@@ -10258,7 +10268,7 @@ verdict AS (
   FROM rep)"""
 
 
-@register("host_boilerplate_clean", oracle="""
+@register("host_boilerplate_clean", bench="host_boilerplate", oracle="""
 SELECT doc_id, text AS clean_text, 3 AS n_lines, 2 AS n_removed
 FROM documents ORDER BY doc_id
 """)
@@ -10287,7 +10297,7 @@ def host_boilerplate_clean(spark: SparkSession,
             .orderBy("doc_id"))
 
 
-@register("host_curation_report", oracle=f"""
+@register("host_curation_report", bench="host_report", oracle=f"""
 WITH f AS ({_quality_f_sql('text,')}),
 {_HOST_REP_SQL}
 SELECT host, n_docs, keep_rate, dup_rate, host_keep
@@ -10326,7 +10336,7 @@ def host_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("host"))
 
 
-@register("host_policy_filter", oracle=f"""
+@register("host_policy_filter", bench="host_filter", oracle=f"""
 WITH f AS ({_quality_f_sql('text, source,')}),
 {_HOST_REP_SQL},
 gated AS (
@@ -10409,7 +10419,7 @@ r{i} AS (
     return ",".join(parts)
 
 
-@register("host_pagerank", oracle=f"""
+@register("host_pagerank", bench="host_pagerank", oracle=f"""
 WITH raw AS (
   SELECT {_HOST_SQL} AS s,
          {_site_sql("(doc_id * 3 + 1) % 13")} AS t
@@ -10472,7 +10482,7 @@ def host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("host"))
 
 
-@register("host_policy_v2", oracle=f"""
+@register("host_policy_v2", bench="host_policy_v2", oracle=f"""
 WITH f AS ({_quality_f_sql('text,')}),
 {_HOST_REP_SQL},
 raw AS (
@@ -10577,7 +10587,7 @@ h{i} AS (
     return ",".join(parts)
 
 
-@register("host_hits_scores", oracle=f"""
+@register("host_hits_scores", bench="host_hits", oracle=f"""
 WITH raw AS (
   SELECT {_HOST_SQL} AS s,
          {_site_sql("(doc_id * 3 + 1) % 13")} AS t

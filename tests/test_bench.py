@@ -54,3 +54,45 @@ def test_bench_end_to_end_toy_scale(tmp_path):
     # the full-result artifact is the stdout JSON, byte-equivalent —
     # stdout truncation can no longer lose the medians/ladder blocks
     assert json.loads(full.read_text()) == out
+
+
+def test_suite_is_the_registry_tags_plus_scale_paths(spark):
+    # builds the suite without running it: the 114 names recorded in
+    # BENCH_r12.json, 107 of them bench= aliases (register() rejects
+    # a repeated alias) that each resolve to a registered query
+    sys.path.insert(0, REPO)
+    import bench
+    from structa_spark.queries import BENCH, REGISTRY
+
+    with open(os.path.join(REPO, "BENCH_r12.json")) as fh:
+        recorded = json.load(fh)["parsed"]["queries"]
+    suite = bench.make_suite(spark, "/root/testdata/sf0.001")
+    assert sorted(suite) == sorted(recorded)
+    assert len(suite) == 114
+    assert len(BENCH) == 107
+    assert set(BENCH.values()) <= set(REGISTRY)
+    for alias, name in BENCH.items():
+        assert suite[alias]._df.func is REGISTRY[name][0], alias
+
+
+def test_plan_fingerprint_ignores_lambda_counter(spark):
+    # each build names its lambda variables from a JVM-wide counter
+    # (x_1, then x_2, ...); the fingerprint must see the same plan
+    import re
+
+    from pyspark.sql import functions as F
+
+    sys.path.insert(0, REPO)
+    import bench
+
+    def build(k):
+        return spark.range(3).select(
+            F.transform(F.array("id"), lambda x: x + k).alias("a"))
+
+    a, b = build(1), build(1)
+    raw = [re.sub(r"#\d+", "#",
+                  d._jdf.queryExecution().optimizedPlan().toString())
+           for d in (a, b)]
+    assert raw[0] != raw[1]
+    assert bench.plan_fingerprint(a) == bench.plan_fingerprint(b)
+    assert bench.plan_fingerprint(a) != bench.plan_fingerprint(build(2))

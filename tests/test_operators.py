@@ -587,6 +587,31 @@ def test_cosine_topk_pandas_matches_expression(vectors):
         assert abs(e[key][1] - v[key][1]) < 1e-5
 
 
+def test_cosine_topk_pandas_breaks_rounded_ties_by_id(spark):
+    # ids 1 and 2 tie at cosine 0.9 after rounding; both sit in ONE
+    # Arrow batch (partition 0 of a corpus already at
+    # defaultParallelism, so ensure_parallelism keeps the layout),
+    # and the unrounded higher cosine belongs to the higher id
+    from structa_spark.operators import similarity
+
+    def vec(c):
+        return [c, math.sqrt(1.0 - c * c)]
+
+    rows = [(1, vec(0.9000001)), (2, vec(0.9000004))]
+    par = spark.sparkContext.defaultParallelism
+    corpus = spark.createDataFrame(
+        spark.sparkContext.parallelize(range(par), par)
+        .flatMap(lambda i: rows if i == 0 else []),
+        "vec_id long, embedding array<double>")
+    q = spark.createDataFrame([(0, [1.0, 0.0])],
+                              "vec_id long, embedding array<double>")
+    got = [(r.query_id, r.vec_id, r.cosine) for r in
+           similarity.cosine_topk_pandas(corpus, q, k=1).collect()]
+    assert got == [(0, 1, 0.9)]
+    assert got == [(r.query_id, r.vec_id, r.cosine) for r in
+                   similarity.cosine_topk(corpus, q, k=1).collect()]
+
+
 def test_parse_json_column_profiles(spark):
     from structa_spark import analyze
     from structa_spark.operators.semistructured import parse_json_column
@@ -2837,23 +2862,19 @@ def test_dsir_logweights_prefer_target_like_docs(spark):
          (3, "the quick brown fox")],
         "doc_id long, text string")
     lw = {r.doc_id: r.logw
-          for r in dsir_logweights(raw, target, n_buckets=256,
-                                   persist=False).collect()}
+          for r in dsir_logweights(raw, target, n_buckets=256).collect()}
     # target-phrased docs must out-score the letter-salad doc
     assert lw[1] > lw[2] and lw[3] > lw[2]
     # resample is deterministic: same inputs -> same selection/scores
-    a = dsir_resample(raw, target, k=2, n_buckets=256,
-                      persist=False).collect()
-    b = dsir_resample(raw, target, k=2, n_buckets=256,
-                      persist=False).collect()
+    a = dsir_resample(raw, target, k=2, n_buckets=256).collect()
+    b = dsir_resample(raw, target, k=2, n_buckets=256).collect()
     assert [(r.doc_id, r.score) for r in a] \
         == [(r.doc_id, r.score) for r in b]
     assert len(a) == 2
     # empty text carries no features and is absent from the weights
     raw2 = spark.createDataFrame([(9, "   ")],
                                  "doc_id long, text string")
-    assert dsir_logweights(raw2, target, n_buckets=256,
-                           persist=False).count() == 0
+    assert dsir_logweights(raw2, target, n_buckets=256).count() == 0
 
 
 def test_dsir_guards_empty_target_and_bad_tau(spark):
@@ -2867,12 +2888,11 @@ def test_dsir_guards_empty_target_and_bad_tau(spark):
     empty_tgt = spark.createDataFrame([(9, "   ")],
                                       "doc_id long, text string")
     with _pytest.raises((Py4JJavaError, PySparkException)):
-        dsir_logweights(raw, empty_tgt, n_buckets=64,
-                        persist=False).collect()
+        dsir_logweights(raw, empty_tgt, n_buckets=64).collect()
     with _pytest.raises(ValueError):
-        dsir_resample(raw, raw, k=1, tau=0.0, persist=False)
+        dsir_resample(raw, raw, k=1, tau=0.0)
     with _pytest.raises(ValueError):
-        dsir_logweights(raw, raw, alpha=0.0, persist=False)
+        dsir_logweights(raw, raw, alpha=0.0)
 
 
 def test_dsir_model_score_matches_one_shot_weights(spark):
@@ -2891,8 +2911,8 @@ def test_dsir_model_score_matches_one_shot_weights(spark):
     scored = {r.doc_id: (r.n_feats, r.logw)
               for r in dsir_score(raw, model).collect()}
     one_shot = {r.doc_id: (r.n_feats, r.logw)
-                for r in dsir_logweights(raw, tgt, n_buckets=256,
-                                         persist=False).collect()}
+                for r in dsir_logweights(raw, tgt,
+                                         n_buckets=256).collect()}
     # scoring the training corpus against its own frozen model
     # reproduces the one-shot weights (same algebra, same rounding)
     assert scored == one_shot
@@ -3151,7 +3171,7 @@ def test_kn_bigram_logprob(spark):
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {r.doc_id: (r.n_bigrams, r.avg_nll)
-           for r in T.kn_bigram_logprob(df, persist=False).collect()}
+           for r in T.kn_bigram_logprob(df).collect()}
     assert set(got) == {1, 2, 3}
     assert got[1] == got[2]                   # deterministic
     # the repeated-bigram page is far more predictable under the
@@ -4336,20 +4356,6 @@ def test_flesch_reading_ease_formula(spark):
     assert r.flesch == round(want, 4)
     assert out[2].n_syllables == 1     # the floor
     assert 3 not in out
-
-
-def test_hits_checkpoint_cadence_is_value_invariant(spark):
-    from structa_spark.operators import graph
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "a")],
-        "src string, dst string")
-    plain = {(r.v, r.authority, r.hub)
-             for r in graph.hits(edges, iters=3).collect()}
-    ck = {(r.v, r.authority, r.hub)
-          for r in graph.hits(edges, iters=3,
-                              checkpoint_every=1).collect()}
-    assert plain == ck
 
 
 def test_source_vocab_overlap_hand_computed(spark):
